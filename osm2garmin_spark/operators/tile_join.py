@@ -23,7 +23,7 @@ SplitProcessor.writeNode:218-220).
 
 from __future__ import annotations
 
-from typing import List, Sequence, Tuple
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -55,36 +55,6 @@ def tiles_df(spark: SparkSession, tiles: Sequence[Area], overlap: int = 2000) ->
         "max_lon long, ext_min_lat long, ext_min_lon long, ext_max_lat long, "
         "ext_max_lon long",
     )
-
-
-def _tile_cells(tiles: Sequence[Area], overlap: int, cell_shift: int
-                ) -> List[Tuple[int, int, int, bool]]:
-    """Explode each tile's extended bbox into covering coarse cells.
-
-    Returns (tile_id, cell_x, cell_y, full) — ``full`` means the cell lies
-    entirely inside the extended bbox so the residual test can be skipped
-    (testNeeded=false analogue, SplitProcessor.java:485-489).
-    """
-    out = []
-    size = 1 << cell_shift
-    for t in tiles:
-        e = t.extend(overlap)
-        cx0 = (e.min_long - _ORIGIN_LON) >> cell_shift
-        cx1 = (e.max_long - _ORIGIN_LON) >> cell_shift
-        cy0 = (e.min_lat - _ORIGIN_LAT) >> cell_shift
-        cy1 = (e.max_lat - _ORIGIN_LAT) >> cell_shift
-        for cx in range(cx0, cx1 + 1):
-            cell_min_lon = (cx << cell_shift) + _ORIGIN_LON
-            cell_max_lon = cell_min_lon + size - 1
-            for cy in range(cy0, cy1 + 1):
-                cell_min_lat = (cy << cell_shift) + _ORIGIN_LAT
-                cell_max_lat = cell_min_lat + size - 1
-                full = (
-                    cell_min_lat >= e.min_lat and cell_max_lat <= e.max_lat
-                    and cell_min_lon >= e.min_long and cell_max_lon <= e.max_long
-                )
-                out.append((t.map_id, cx, cy, full))
-    return out
 
 
 def _tile_candidates_df(spark: SparkSession, tiles: Sequence[Area],

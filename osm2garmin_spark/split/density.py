@@ -4,18 +4,14 @@ The reference streams every node through DensityMapCollector.processNode
 (DensityMapCollector.java:50-56) updating a driver-local int[][] — inherently
 single-node. Here the histogram is one Spark ``groupBy(cell_x, cell_y)``
 with map-side partial aggregation, so the full scan is distributed and only
-the occupied-cell table is collected. Exact data bounds (MapDetails.java:
-32-49) come from a second 1-row aggregate over the same two columns — the
-reference likewise makes a full analyze pass before the split.
+the occupied-cell table crosses to the driver.
 
-Scale notes (these were measured, not guessed):
-- per-cell lat/lon min/max ride the ONE input scan (map-side partial agg),
-  but only 3 int64 columns (cell key + count) cross to the driver: the
-  global exact bounds reduce to a 1-row parallel aggregate over the
-  persisted cell table, so the serial Arrow transfer is 3/7 the width
-  (the driver transfer is the Amdahl floor of the tiling job).
-- groupBy output has unique cells, so the driver grid is built by direct
-  fancy-index assignment, not np.add.at (buffered ufunc, ~10× slower).
+``collect_density`` runs ONE job with ONE Arrow transfer of three int64
+columns (cell_x, cell_y, cnt). The exact data bounds (MapDetails.java:
+32-49) ride the same scan: a ``pyspark.sql.Observation`` on the filtered
+lat_mu/lon_mu projection reduces their min/max on the executors and hands
+the driver one row. The driver keeps the cell table as it arrives —
+``quadtree.split_area`` splits it directly and no dense grid is built.
 
 addNode semantics preserved exactly (DensityMap.java:63-78): closed-bounds
 containment filter, then x/y cell with the x==width / y==height clamp.
@@ -23,43 +19,42 @@ containment filter, then x/y cell with the x==width / y==height clamp.
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import Optional, Tuple
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..geo.area import Area, PLANET, round_area
 from ..expressions import map_unit
 from .quadtree import DensityGrid
 
 
+def _inside_mu(df: DataFrame, lat_col: str, lon_col: str, b: Area) -> DataFrame:
+    """(lat_mu, lon_mu) of the rows inside the rounded bounds ``b``
+    (out-of-bounds rows never reach the histogram — DensityMap.addNode:64-65)."""
+    mu = df.select(map_unit(F.col(lat_col)).alias("lat_mu"),
+                   map_unit(F.col(lon_col)).alias("lon_mu"))
+    return mu.filter(
+        (F.col("lat_mu") >= F.lit(b.min_lat)) & (F.col("lat_mu") <= F.lit(b.max_lat))
+        & (F.col("lon_mu") >= F.lit(b.min_long)) & (F.col("lon_mu") <= F.lit(b.max_long)))
+
+
+def _histogram(inside: DataFrame, b: Area, resolution: int) -> DataFrame:
+    shift = 24 - resolution
+    x = F.least(F.shiftright(F.col("lon_mu") - F.lit(b.min_long), shift),
+                F.lit((b.width >> shift) - 1))
+    y = F.least(F.shiftright(F.col("lat_mu") - F.lit(b.min_lat), shift),
+                F.lit((b.height >> shift) - 1))
+    return (inside.groupBy(x.alias("cell_x"), y.alias("cell_y"))
+            .agg(F.count(F.lit(1)).alias("cnt")))
+
+
 def density_cells(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
                   resolution: int = 13, bounds: Area = PLANET) -> DataFrame:
     """Per-cell node counts, one distributed scan.
-    Returns (cell_x, cell_y, cnt); out-of-bounds rows are dropped here
-    (they never reach the histogram — DensityMap.addNode:64-65)."""
+    Returns (cell_x, cell_y, cnt); out-of-bounds rows are dropped here."""
     b = round_area(bounds, resolution)
-    shift = 24 - resolution
-    width = b.width >> shift
-    height = b.height >> shift
-
-    lat_mu = map_unit(F.col(lat_col))
-    lon_mu = map_unit(F.col(lon_col))
-    mu = df.select(lat_mu.alias("lat_mu"), lon_mu.alias("lon_mu"))
-    inside = (
-        (F.col("lat_mu") >= F.lit(b.min_lat)) & (F.col("lat_mu") <= F.lit(b.max_lat))
-        & (F.col("lon_mu") >= F.lit(b.min_long)) & (F.col("lon_mu") <= F.lit(b.max_long))
-    )
-    x = F.least(F.shiftright(F.col("lon_mu") - F.lit(b.min_long), shift),
-                F.lit(width - 1))
-    y = F.least(F.shiftright(F.col("lat_mu") - F.lit(b.min_lat), shift),
-                F.lit(height - 1))
-    return (mu.filter(inside)
-            .groupBy(x.alias("cell_x"), y.alias("cell_y"))
-            .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.min("lat_mu").alias("min_lat_mu"),
-                 F.max("lat_mu").alias("max_lat_mu"),
-                 F.min("lon_mu").alias("min_lon_mu"),
-                 F.max("lon_mu").alias("max_lon_mu")))
+    return _histogram(_inside_mu(df, lat_col, lon_col, b), b, resolution)
 
 
 def exact_bounds(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon"
@@ -76,37 +71,28 @@ def exact_bounds(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon"
 
 def collect_density(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
                     resolution: int = 13, bounds: Area = PLANET,
-                    ) -> Tuple[DensityGrid, Area]:
-    """Run the density scan and materialize (DensityGrid, exact data Area).
+                    ) -> Tuple[DensityGrid, Optional[Area]]:
+    """Run the density scan and return (DensityGrid, exact data Area).
 
-    One distributed job: histogram + exact bounds ride the same groupBy
-    (per-cell min/max → global min/max on the driver). Caveat vs MapDetails:
-    rows outside the (polar-clamped) planet bounds don't reach the histogram
-    and so don't widen the exact area — for |lat| ≤ 85 inputs the results
-    are identical; callers needing literal MapDetails semantics over polar
-    rows can use ``exact_bounds`` separately."""
-    import numpy as np
-
-    grid = DensityGrid(bounds, trim=True, resolution=resolution)
-    # ONE job, ONE Arrow transfer (round 7): the previous shape persisted
-    # the cell table so a second 1-row aggregate could reduce the exact
-    # bounds on executors, keeping the driver transfer at 3/7 width — but
-    # the persist materialization + second job cost ~3 s against a ~1 s
-    # width saving once the occupied-cell count reaches ~10^6 (sparse
-    # points at resolution 13). The full 7-column cell table now crosses
-    # once and the global bounds reduce in numpy over the per-cell
-    # min/max (identical integers, reduction order irrelevant). The
-    # occupied-cell transfer is still the driver path's documented
-    # O(occupied cells) bound; callers beyond it use
-    # split_strategy="distributed".
-    pdf = density_cells(df, lat_col, lon_col, resolution, bounds).toPandas()
+    The grid holds the occupied-cell table. The exact Area is None when no
+    row lies inside the bounds. Caveat vs MapDetails: rows outside the
+    (polar-clamped) bounds don't reach the histogram and so don't widen
+    the exact area — for |lat| ≤ 85 inputs the results are identical;
+    callers needing literal MapDetails semantics over polar rows can use
+    ``exact_bounds`` separately."""
+    b = round_area(bounds, resolution)
+    observed = Observation()
+    inside = _inside_mu(df, lat_col, lon_col, b).observe(
+        observed,
+        F.min("lat_mu").alias("min_lat"), F.min("lon_mu").alias("min_lon"),
+        F.max("lat_mu").alias("max_lat"), F.max("lon_mu").alias("max_lon"))
+    pdf = _histogram(inside, b, resolution).toPandas()
+    grid = DensityGrid(bounds, trim=True, resolution=resolution,
+                       cells=(pdf["cell_x"].to_numpy(np.int64),
+                              pdf["cell_y"].to_numpy(np.int64),
+                              pdf["cnt"].to_numpy(np.int64)))
     if len(pdf) == 0:
         return grid, None
-    xs = pdf["cell_x"].to_numpy(np.int64)
-    ys = pdf["cell_y"].to_numpy(np.int64)
-    cnts = pdf["cnt"].to_numpy(np.int64)
-    grid.grid[xs, ys] = cnts          # cells unique after groupBy
-    grid.total = int(cnts.sum())
-    exact = Area(int(pdf["min_lat_mu"].min()), int(pdf["min_lon_mu"].min()),
-                 int(pdf["max_lat_mu"].max()), int(pdf["max_lon_mu"].max()))
-    return grid, exact
+    m = observed.get
+    return grid, Area(int(m["min_lat"]), int(m["min_lon"]),
+                      int(m["max_lat"]), int(m["max_lon"]))

@@ -1,136 +1,29 @@
-"""Level-synchronous distributed quadtree split.
+"""Spark aggregator of the shared quadtree loop (``quadtree.split_levels``).
 
-Same bit-exact semantics as ``split/quadtree.split_area`` (the tested port
-of SplittableDensityArea.java) but the density grid never materializes on
-the driver: at each recursion level, ONE Spark job aggregates per-node
-column sums and row sums of the cell-count table (broadcast join of cells
-onto the active nodes' windows, two groupBys), and the driver runs only the
-integer split logic on those 1-D vectors.
-
-Why 1-D vectors suffice (proof sketch, relied on below):
-- every node's *window* (the pre-trim half handed down by its parent) has
-  cell-aligned edges and even cell dimensions (rounding forces even dims;
-  split midpoints are even), so RoundingUtils.round's parity push can never
-  move the trimmed bounds outside the window — final bounds ⊆ window.
-- trim only shaves empty border rows/columns, so the column sums over the
-  window's y-range equal the column sums over the final bounds' y-range.
-- a child's window ⊆ its parent's final bounds ⊆ ... ⊆ the planet grid, so
-  "content" is simply the global cell table restricted to the window — no
-  clip chain is needed.
-(The root window is the intersection of the planet grid with the rounded
-exact bbox and may have odd dims; its rare parity overhang reads zero
-content, consistent with the grid simply having no cells there.)
+The driver split (``quadtree.split_area``) collects the occupied-cell
+table and answers each node's axis sums from an in-memory index. Here the
+cell table stays in Spark: at each tree level, ONE Spark job aggregates
+every active node's column sums and row sums (broadcast join of cells onto
+the nodes' windows, one groupBy), and the driver runs only the integer
+split logic on those 1-D vectors. Same loop, same tiles, bit for bit.
 
 Driver memory: O(Σ window perimeter) per level — independent of the number
-of input rows AND of the grid size; Spark jobs: 2 aggregations per tree
-level (≈ 2·log2(n_tiles) + trim depth).
+of input rows AND of the occupied cells; Spark jobs: one aggregation per
+tree level (≈ 2·log2(n_tiles) + trim depth), plus one at a level whose
+rounded bounds must be read again (see ``quadtree``'s module notes).
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Tuple
+from functools import partial
+from typing import List, Sequence, Tuple
 
 import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..geo.area import Area, PLANET, round_area
-from ..geo.units import to_degrees
-from .quadtree import (SplittableDensityArea, _mix_results,
-                       rounded_split_bounds)
-
-
-@dataclass
-class _Node:
-    node_id: int
-    window: Area                       # pre-trim bounds, map units
-    bounds: Optional[Area] = None      # final (trimmed+rounded)
-    count: int = 0
-    colsum: Optional[np.ndarray] = None  # over final bounds' x cells
-    rowsum: Optional[np.ndarray] = None
-    leaf: bool = False
-    empty: bool = False
-    children: Optional[Tuple["_Node", "_Node"]] = None
-
-
-def _trim_round(window: Area, colsum_w: np.ndarray, rowsum_w: np.ndarray,
-                shift: int, resolution: int) -> Optional[Area]:
-    """DensityGrid._trim + round over the window-level vectors.
-    Returns the final Area or None if empty."""
-    occ_x = np.nonzero(colsum_w > 0)[0]
-    if len(occ_x) == 0:
-        return None
-    min_x, max_x = int(occ_x[0]), int(occ_x[-1]) + 1
-    occ_y = np.nonzero(rowsum_w > 0)[0]
-    # rowsum over window-x equals rowsum over trimmed-x: shaved columns are
-    # empty, contributing nothing
-    if len(occ_y) == 0:
-        return None
-    min_y, max_y = int(occ_y[0]), int(occ_y[-1]) + 1
-
-    trimmed = Area(window.min_lat + (min_y << shift),
-                   window.min_long + (min_x << shift),
-                   window.min_lat + (max_y << shift),
-                   window.min_long + (max_x << shift))
-    rounded = round_area(trimmed, resolution)
-    lat_adjust = max(0, rounded.max_lat - window.max_lat)
-    lon_adjust = max(0, rounded.max_long - window.max_long)
-    if lat_adjust > 0 or lon_adjust > 0:
-        rounded = Area(rounded.min_lat - lat_adjust,
-                       rounded.min_long - lon_adjust,
-                       rounded.max_lat - lat_adjust,
-                       rounded.max_long - lon_adjust)
-    return rounded
-
-
-def _limit(first: int, second: int, calc_offset: int) -> Optional[int]:
-    return SplittableDensityArea._limit(first, second, calc_offset)
-
-
-def _decide(node: _Node, max_nodes: int, shift: int):
-    """Reference split() control flow (SplittableDensityArea.java:52-100)
-    on the node's final-bounds vectors."""
-    b = node.bounds
-    width = b.width >> shift
-    height = b.height >> shift
-    if node.count <= max_nodes:
-        node.leaf = True
-        return None
-    if width < 4 and height < 4:
-        node.leaf = True
-        return None
-
-    colsum, rowsum = node.colsum, node.rowsum
-    s = int(colsum.sum())
-    ws_x = int((colsum * np.arange(width, dtype=np.int64)).sum())
-    ws_y = int((rowsum * np.arange(height, dtype=np.int64)).sum())
-    split_x = _limit(0, width, ws_x // s)
-    split_y = _limit(0, height, ws_y // s)
-
-    width1 = int(np.trunc(width * math.cos(math.radians(to_degrees(b.min_lat)))))
-    width2 = int(np.trunc(width * math.cos(math.radians(to_degrees(b.max_lat)))))
-    aspect = float(max(width1, width2)) / height
-
-    def vert():
-        mid = b.min_lat + (split_y << shift)
-        return (Area(b.min_lat, b.min_long, mid, b.max_long),
-                Area(mid, b.min_long, b.max_lat, b.max_long))
-
-    def horiz():
-        mid = b.min_long + (split_x << shift)
-        return (Area(b.min_lat, b.min_long, b.max_lat, mid),
-                Area(b.min_lat, mid, b.max_lat, b.max_long))
-
-    if aspect <= 1.0 and height >= 4 and split_y is not None:
-        return vert()
-    if width >= 4 and split_x is not None:
-        return horiz()
-    if aspect > 1.0 and height >= 4 and split_y is not None:
-        return vert()
-    node.leaf = True
-    return None
+from .quadtree import AxisSums, Window, split_levels
 
 
 #: broadcast block-table row budget (≈15 MB at ~56 B/row)
@@ -147,11 +40,9 @@ def _block_shift(spans: List[Tuple[int, int]]) -> int:
     return 40
 
 
-def _aggregate_level(cells: DataFrame, nodes: List[_Node], shift: int,
-                     origin: Area) -> Dict[int, Tuple[np.ndarray, np.ndarray]]:
-    """One Spark job: per-node column/row sums over each node's window.
-    ``origin`` = the rounded bounds density_cells used (cell coords are
-    relative to its min corner).
+def _aggregate_level(cells: DataFrame, windows: Sequence[Window]
+                     ) -> List[AxisSums]:
+    """One Spark job: per-window column/row sums of ``cells``.
 
     The cells→windows association is an EQUI-join on a power-of-two block
     prefix of the cell coordinate (each window explodes to the blocks it
@@ -163,17 +54,10 @@ def _aggregate_level(cells: DataFrame, nodes: List[_Node], shift: int,
     spark = cells.sparkSession
     import pandas as pd
 
-    geom = []
-    for n in nodes:
-        wx0 = (n.window.min_long - origin.min_long) >> shift
-        wx1 = (n.window.max_long - origin.min_long) >> shift
-        wy0 = (n.window.min_lat - origin.min_lat) >> shift
-        wy1 = (n.window.max_lat - origin.min_lat) >> shift
-        geom.append((n.node_id, wx0, wx1, wy0, wy1))
-    k = _block_shift([(wx1 - wx0, wy1 - wy0) for _, wx0, wx1, wy0, wy1 in geom])
-
+    k = _block_shift([(x1 - x0, y1 - y0) for x0, x1, y0, y1 in windows])
     rows = []
-    for nid, wx0, wx1, wy0, wy1 in geom:
+    # the window's position in this call's list is its node id
+    for nid, (wx0, wx1, wy0, wy1) in enumerate(windows):
         for bx in range(wx0 >> k, ((wx1 - 1) >> k) + 1):
             for by in range(wy0 >> k, ((wy1 - 1) >> k) + 1):
                 rows.append((nid, bx, by, wx0, wx1, wy0, wy1))
@@ -199,38 +83,24 @@ def _aggregate_level(cells: DataFrame, nodes: List[_Node], shift: int,
           .select("node_id", "e.ax", "e.coord", "e.cnt"))
     both = (ex.groupBy("node_id", "ax", "coord").agg(F.sum("cnt").alias("s"))
             .toPandas())
-    cols = both[both["ax"] == 0].rename(columns={"coord": "cell_x"})
-    rows = both[both["ax"] == 1].rename(columns={"coord": "cell_y"})
 
-    out: Dict[int, Tuple[np.ndarray, np.ndarray]] = {}
-    for n in nodes:
-        wx0 = (n.window.min_long - origin.min_long) >> shift
-        wy0 = (n.window.min_lat - origin.min_lat) >> shift
-        w = n.window.width >> shift
-        h = n.window.height >> shift
-        out[n.node_id] = (np.zeros(w, dtype=np.int64),
-                          np.zeros(h, dtype=np.int64))
-        n._wx0, n._wy0 = wx0, wy0  # type: ignore[attr-defined]
-    for nid, cx, s in cols[["node_id", "cell_x", "s"]].itertuples(index=False):
-        node = _by_id[nid]
-        out[nid][0][int(cx) - node._wx0] = s
-    for nid, cy, s in rows[["node_id", "cell_y", "s"]].itertuples(index=False):
-        node = _by_id[nid]
-        out[nid][1][int(cy) - node._wy0] = s
+    out = [(np.zeros(x1 - x0, dtype=np.int64), np.zeros(y1 - y0, dtype=np.int64))
+           for x0, x1, y0, y1 in windows]
+    for nid, ax, coord, s in both[["node_id", "ax", "coord", "s"]].itertuples(
+            index=False):
+        x0, _, y0, _ = windows[nid]
+        out[nid][ax][int(coord) - (y0 if ax else x0)] = s
     return out
-
-
-_by_id: Dict[int, _Node] = {}
 
 
 def split_area_distributed(cells: DataFrame, exact_area: Area,
                            resolution: int, max_nodes: int,
                            first_map_id: int = 63240001,
-                           max_levels: int = 64,
                            bounds: Area = PLANET,
                            stats: dict = None) -> List[Area]:
-    """Distributed twin of quadtree.split_area. ``cells`` is the output of
-    density_cells (cell_x, cell_y, cnt) — persist it before calling.
+    """The quadtree split with the cell table kept in Spark: the tiles of
+    quadtree.split_area. ``cells`` is the output of density_cells
+    (cell_x, cell_y, cnt) — persist it before calling.
 
     ``bounds`` MUST be the same Area density_cells was called with: cell
     coordinates are relative to round_area(bounds)'s min corner, so the
@@ -239,95 +109,8 @@ def split_area_distributed(cells: DataFrame, exact_area: Area,
     runs).
 
     ``stats``: optional dict filled with {"levels": n} — the number of
-    level-synchronous rounds actually run (bench instrumentation for the
-    jobs-per-level contract)."""
-    global _by_id
-    shift = 24 - resolution
-    origin = round_area(bounds, resolution)
-    # the SAME sliver-padded bbox as the driver path — computing plain
-    # round_area here made the twin diverge on any corpus whose min-lat /
-    # max-lon edge rounds inward (quadtree.rounded_split_bounds)
-    bbounds = rounded_split_bounds(exact_area, resolution)
-    root_window = Area(max(origin.min_lat, bbounds.min_lat),
-                       max(origin.min_long, bbounds.min_long),
-                       min(origin.max_lat, bbounds.max_lat),
-                       min(origin.max_long, bbounds.max_long))
-    if root_window.max_lat <= root_window.min_lat or \
-       root_window.max_long <= root_window.min_long:
-        return []
-
-    next_id = [0]
-
-    def new_node(window: Area) -> _Node:
-        n = _Node(node_id=next_id[0], window=window)
-        next_id[0] += 1
-        _by_id[n.node_id] = n
-        return n
-
-    _by_id = {}
-    root = new_node(root_window)
-    active = [root]
-
-    levels_run = 0
-    for _level in range(max_levels):
-        if not active:
-            break
-        levels_run += 1
-        vecs = _aggregate_level(cells, active, shift, origin)
-        next_active: List[_Node] = []
-        for n in active:
-            colsum_w, rowsum_w = vecs[n.node_id]
-            if colsum_w.sum() == 0:
-                n.empty = True
-                continue
-            b = _trim_round(n.window, colsum_w, rowsum_w, shift, resolution)
-            if b is None:
-                n.empty = True
-                continue
-            n.bounds = b
-            # slice window vectors down to the final bounds (shaved border
-            # rows/cols are empty so sums are unchanged)
-            x0 = (b.min_long - n.window.min_long) >> shift
-            x1 = (b.max_long - n.window.min_long) >> shift
-            y0 = (b.min_lat - n.window.min_lat) >> shift
-            y1 = (b.max_lat - n.window.min_lat) >> shift
-            wlen = len(colsum_w)
-            hlen = len(rowsum_w)
-            n.colsum = _slice_pad(colsum_w, x0, x1)
-            n.rowsum = _slice_pad(rowsum_w, y0, y1)
-            n.count = int(n.colsum.sum())
-            if n.count == 0:
-                n.empty = True
-                continue
-            halves = _decide(n, max_nodes, shift)
-            if halves is not None:
-                c0 = new_node(halves[0])
-                c1 = new_node(halves[1])
-                n.children = (c0, c1)
-                next_active.extend([c0, c1])
-        active = next_active
-
-    def order(n: _Node) -> List[Area]:
-        if n.empty:
-            return []
-        if n.leaf or n.children is None:
-            return [n.bounds]
-        return _mix_results(order(n.children[0]), order(n.children[1]))
-
-    if stats is not None:
-        stats["levels"] = levels_run
-    areas = order(root)
-    return [Area(a.min_lat, a.min_long, a.max_lat, a.max_long,
-                 map_id=first_map_id + i) for i, a in enumerate(areas)]
-
-
-def _slice_pad(v: np.ndarray, lo: int, hi: int) -> np.ndarray:
-    """v[lo:hi] with zero padding where the final bounds poke past the
-    window (root-window odd-parity overhang only — zero content there)."""
-    n = hi - lo
-    out = np.zeros(n, dtype=np.int64)
-    src_lo = max(lo, 0)
-    src_hi = min(hi, len(v))
-    if src_hi > src_lo:
-        out[src_lo - lo: src_hi - lo] = v[src_lo:src_hi]
-    return out
+    aggregation rounds actually run, one Spark action each (bench
+    instrumentation for the jobs-per-level contract)."""
+    return split_levels(partial(_aggregate_level, cells),
+                        round_area(bounds, resolution), exact_area,
+                        resolution, max_nodes, first_map_id, stats)

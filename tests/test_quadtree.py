@@ -164,37 +164,47 @@ def test_bottom_sliver_points_get_a_tile(spark):
     assert covered == 3000
 
 
-def test_sat_split_matches_direct_passes():
-    # round 7: the summed-area-table path must reproduce the direct
-    # numpy-pass recursion bit-for-bit — totals, trim, axis sums, tiles
-    import numpy as np
-    from osm2garmin_spark.geo.area import Area, PLANET
-    from osm2garmin_spark.split.quadtree import DensityGrid, split_area
+def _direct_split(grid, exact, res, max_nodes):
+    """The reference recursion on the dense grid, with split_area's
+    sliver-padded root bbox, empty-result retry and map ids."""
+    from osm2garmin_spark.split.quadtree import (SplittableDensityArea,
+                                                 rounded_split_bounds)
 
+    areas = SplittableDensityArea(
+        grid.subset(rounded_split_bounds(exact, res))).split(max_nodes)
+    if not areas:
+        padded = round_area(exact.extend(1 << (24 - res)), res)
+        areas = SplittableDensityArea(grid.subset(padded)).split(max_nodes)
+    return [(63240001 + i, a.min_lat, a.min_long, a.max_lat, a.max_long)
+            for i, a in enumerate(areas)]
+
+
+def test_level_loop_matches_direct_recursion():
+    """split_area (the level loop over the grid's occupied cells) must
+    reproduce the direct SplittableDensityArea recursion on the same
+    dense grid exactly: random grids at resolutions 9 and 11, and a
+    clustered resolution-13 grid."""
     rng = np.random.default_rng(7)
+    grids = []
     for res, n_pts, max_nodes in ((9, 4000, 50), (11, 20000, 200)):
-        g1 = DensityGrid(PLANET, trim=True, resolution=res)
-        g2 = DensityGrid(PLANET, trim=True, resolution=res)
-        xs = rng.integers(0, g1.width, n_pts)
-        ys = rng.integers(0, g1.height, n_pts)
+        g = DensityGrid(PLANET, trim=True, resolution=res)
+        xs = rng.integers(0, g.width, n_pts)
+        ys = rng.integers(0, g.height, n_pts)
         # clustered + uniform mix so trim and the median clamp both fire
-        xs[: n_pts // 2] = xs[: n_pts // 2] % max(g1.width // 7, 1)
-        np.add.at(g1.grid, (xs, ys), 1)
-        np.add.at(g2.grid, (xs, ys), 1)
-        g1.total = g2.total = int(g1.grid.sum())
-        exact = Area(g1.y_to_lat(int(ys.min())), g1.x_to_lon(int(xs.min())),
-                     g1.y_to_lat(int(ys.max()) + 1),
-                     g1.x_to_lon(int(xs.max()) + 1))
-        g1.build_sat()
-        assert getattr(g1, "_sat", None) is not None
-        tiles_sat = split_area(g1, exact, res, max_nodes)
-        # defeat build_sat for the control: negative sentinel then undo
-        g2.grid[0, 0] -= 10**9
-        g2.build_sat()
-        g2.grid[0, 0] += 10**9
-        assert getattr(g2, "_sat", None) is None
-        tiles_direct = split_area(g2, exact, res, max_nodes)
-        assert [(t.map_id, t.min_lat, t.min_long, t.max_lat, t.max_long)
-                for t in tiles_sat] == \
-               [(t.map_id, t.min_lat, t.min_long, t.max_lat, t.max_long)
-                for t in tiles_direct]
+        xs[: n_pts // 2] = xs[: n_pts // 2] % max(g.width // 7, 1)
+        np.add.at(g.grid, (xs, ys), 1)
+        g.total = int(g.grid.sum())
+        exact = Area(g.y_to_lat(int(ys.min())), g.x_to_lon(int(xs.min())),
+                     g.y_to_lat(int(ys.max()) + 1),
+                     g.x_to_lon(int(xs.max()) + 1))
+        grids.append((g, exact, res, max_nodes))
+    lats, lons = _synth_points(60000, seed=11)
+    g = _make_grid_from_points(lats, lons)
+    exact = Area(int(lats.min()), int(lons.min()), int(lats.max()), int(lons.max()))
+    grids.append((g, exact, RES, 400))
+
+    for g, exact, res, max_nodes in grids:
+        got = [(t.map_id, t.min_lat, t.min_long, t.max_lat, t.max_long)
+               for t in split_area(g, exact, res, max_nodes)]
+        assert len(got) > 10
+        assert got == _direct_split(g, exact, res, max_nodes)

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from osm2garmin_spark.geo.area import Area, PLANET
 from osm2garmin_spark.geo.units import to_map_unit
@@ -166,3 +167,50 @@ def test_keep_complete_pulls_out_of_bounds_members(spark):
     out = {(r["node_id"], r["tile_id"]) for r in
            keep_complete_nodes(members, node_tiles, group_tiles).collect()}
     assert out == {(10, 1), (20, 1), (30, 2), (99, 1)}
+
+
+def _rows(spark, rows, partitions=1):
+    return spark.createDataFrame(rows, "event_id long, lat double, lon double") \
+        .repartition(partitions)
+
+
+def test_density_no_rows_inside_bounds(spark):
+    """An empty input and an all-polar input (|lat| > 85, outside the
+    density grid) both give (grid, None), and the pipeline returns None."""
+    from osm2garmin_spark.split.quadtree import split_area
+
+    empty = _rows(spark, [])
+    polar = _rows(spark, [(i, (-1) ** i * (85.5 + i * 0.4), i * 10.0)
+                          for i in range(10)], partitions=3)
+    for df in (empty, polar):
+        grid, exact = collect_density(df, "lat", "lon", 13, PLANET)
+        assert exact is None and grid.node_count() == 0
+        assert split_area(grid, Area(0, 0, 1, 1), 13, 100) == []
+        assert run_tiling_pipeline(df, max_nodes=100) is None
+
+
+@pytest.mark.parametrize("case", ["one-row", "single-partition", "lon+180"])
+def test_density_observed_bounds_equal_exact_bounds(spark, case):
+    """The bounds observed on the density scan equal exact_bounds(), and
+    every input row lands in a tile — including a point at lon = +180,
+    the closed max edge of the planet grid."""
+    from osm2garmin_spark.expressions import derived_lat, derived_lon
+    from osm2garmin_spark.split.density import exact_bounds
+
+    if case == "one-row":
+        df = _rows(spark, [(7, 48.85, 2.35)])
+    elif case == "single-partition":
+        df = spark.range(0, 3000, 1, 1).select(
+            F.col("id").alias("event_id"), derived_lat(F.col("id")).alias("lat"),
+            derived_lon(F.col("id")).alias("lon"))
+    else:
+        df = _rows(spark, [(0, 10.0, 180.0), (1, -12.5, 179.99), (2, 33.0, -120.0),
+                           (3, -40.0, 100.0)], partitions=2)
+    n = df.count()
+    grid, exact = collect_density(df, "lat", "lon", 13, PLANET)
+    assert exact == exact_bounds(df, "lat", "lon")
+    assert grid.node_count() == n
+
+    res = run_tiling_pipeline(df, max_nodes=max(n // 10, 1), overlap=0)
+    assert res is not None
+    assert res.assigned.select("event_id").distinct().count() == n
