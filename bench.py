@@ -155,16 +155,12 @@ def main():
         finally:
             knn_log.removeHandler(cap)
             knn_log.setLevel(old_level)
-        # escalated fraction: the level-1 log line carries the level-0
-        # escalated count ("resolved R of E, Z escalate")
+        # escalated fraction: the level-0 log line carries the level-0
+        # escalated count ("level 0 (cell=C) resolved n/a, E escalate")
         import re as _re
         esc = 0
         for m in msgs:
-            g = _re.search(r"resolved \d+ of (\d+)", m)
-            if g:
-                esc = int(g.group(1))
-                break
-            g = _re.search(r"\(covers extent\), (\d+) queries", m)
+            g = _re.search(r"level 0 \(.*\) resolved .*, (\d+) escalate", m)
             if g:
                 esc = int(g.group(1))
                 break

@@ -155,20 +155,6 @@ def _plane_matrix(dim: int, num_planes: int, num_tables: int) -> np.ndarray:
                      for t in range(num_tables) for p in range(num_planes)])
 
 
-def lsh_bucket(vec: Column, dim: int, num_planes: int = 12) -> Column:
-    """Single-table sign-pattern bucket id as a column expression (kept for
-    column-level composition; the scan path uses lsh_bucket_table)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(num_planes):
-        plane = _hyperplane(dim, p + 1)
-        d = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(x) for x in plane]),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, v: acc + v)
-        bucket = bucket + F.when(d > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_bucket_table(df: DataFrame, id_col: str, vec_col: str, dim: int,
                      num_planes: int, num_tables: int) -> DataFrame:
     """(id, tbl, bucket): one row per input row per table. All T*P plane

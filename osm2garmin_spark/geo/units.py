@@ -86,7 +86,3 @@ def round_nearest(val, shift):
     res = _to_i32((u >> np.uint64(shift)) << np.uint64(shift))
     return int(res) if np.isscalar(val) else res
 
-
-def is_power_of_two(n: int) -> bool:
-    """Utils.java:74-76."""
-    return n > 0 and (n & (n - 1)) == 0

@@ -1,64 +1,47 @@
-"""Exact kNN via hexagonal k-ring expansion + sort-merge refine.
+"""Exact kNN, hex cell scheme: 7-cell flowers on the aperture-7 index.
 
 The north-star names this operator shape explicitly: "kNN lookup via H3
-k-ring expansion with a sort-merge refine".  This is the hex twin of
-``operators/knn.py::knn_grid`` (same escalation discipline, same
-exactness contract, bit-identical results — pinned by parity tests),
-built on the aperture-7 index in ``geo/hex.py``:
+k-ring expansion with a sort-merge refine". ``knn_hex_kring`` is the hex
+cell scheme of the one escalation loop ``operators/knn.py::_knn_exact``
+(same exactness contract as knn_grid, bit-identical results — pinned by
+parity tests), built on ``geo/hex.py``:
 
-- Level 0: each query explodes to its k=1 grid disk (the 7-cell
-  "flower": home cell + 6 ring-1 neighbors) at the tuned resolution;
-  neighbors are keyed by their own single cell — a plain shuffled
-  equi-join on the packed cell key, so the candidate volume is
-  7x|queries| and the neighbor side is never exploded.  The refine is
-  the sort-based per-query top-k (a rank over candidates sorted by
-  (d^2, n_id) — the "sort-merge refine": candidates arrive
-  merge-grouped by query from the join shuffle and are sorted once).
-- Completion proof per query: cell centers at hex distance >= 2 from
-  the home cell are >= 2*sqrt(3)*apothem away (lattice minimum, tight
-  on even rings — pinned in tests/test_hex.py), a point is at most one
-  circumradius from its center, and the query sits qdist from its home
-  center; so every unexplored point is farther than
-  ``margin = 2*sqrt(3)*a - R_c - qdist``.  A query is complete iff it
-  has >= k candidates and the k-th distance is STRICTLY below margin
-  (a tie on the flower boundary could win the n_id tie-break).
-- Escalation: level j re-runs the same 7-cell flower one resolution
-  COARSER (res - j; negative res = coarser than the base lattice is
-  well-defined — the basis matrix power just continues), for the
-  escalated queries only.  Each level's top-k is complete for its own
-  flower, so no cross-level merge is needed; the first level whose
-  guaranteed-covered radius (2*sqrt(3)*a - 2*R_c = 2a/sqrt(3)) reaches
-  the combined query+neighbor extent diagonal is exact outright.
-  Apothem grows sqrt(7)x per level => O(log extent) levels.
-- Same scale discipline as knn_grid: localCheckpoint plan truncation
-  per level, escalated side broadcast under BROADCAST_ESCALATED, small
-  neighbor tables dispatch to the broadcast numpy kernel, no driver
-  collect of either table at any size.
+- Level j runs at resolution res - j (negative res = coarser than the
+  base lattice is well-defined — the basis matrix power just continues;
+  apothem grows sqrt(7)x per level => O(log extent) levels). Each
+  escalated query explodes to its k=1 grid disk (the 7-cell "flower":
+  home cell + 6 ring-1 neighbors); neighbors are keyed by their own
+  single cell — a plain equi-join on the packed cell key, so the
+  candidate volume is 7x|queries| and the neighbor side is never
+  exploded. The refine is the loop's sort-based per-query top-k (the
+  "sort-merge refine": candidates arrive grouped by query from the join
+  shuffle and are sorted once by (d^2, n_id)).
+- Margin: cell centers at hex distance >= 2 from the home cell are
+  >= 2*sqrt(3)*apothem away (lattice minimum, tight on even rings —
+  pinned in tests/test_hex.py), a point is at most one circumradius from
+  its center, and the query sits qdist from its home center; so every
+  unexplored point is farther than ``2*sqrt(3)*a - R_c - qdist``.
+- Coverage: from ANY query position the flower covers radius
+  2*sqrt(3)*a - 2*R_c (= 2a/sqrt(3)); the level where that reaches the
+  combined query+neighbor extent diagonal is exact outright.
 
 vs knn_grid (square cells): the flower explodes 7 cells instead of 9
 (22% fewer candidate rows at equal cell area), and the hex lattice's
 isotropy makes the covered radius direction-independent — the square
-ring's worst case is its diagonal.  Reference analogue:
+ring's worst case is its diagonal. Reference analogue:
 DefaultCityFinder.java:39-105 (sort + refine over candidate cities).
-
-MAINTENANCE: this loop is a structural twin of
-``operators/knn.py::knn_grid``; a change to the escalation/checkpoint/
-broadcast discipline in either must be mirrored in the other (both
-carry this note).
 """
 
 from __future__ import annotations
 
-import logging
 import math
 
-from pyspark.sql import DataFrame, functions as F, Window
+from pyspark.sql import DataFrame, functions as F
 
 from ..geo import hex as hx
-from .knn import (SMALL_NEIGHBORS, BROADCAST_ESCALATED, _dist2,
-                  _neighbor_stats, knn_bruteforce_np)
-
-_LOG = logging.getLogger(__name__)
+# knn_bruteforce_np: re-exported, the small-table kernel the loop
+# dispatches to for both cell schemes
+from .knn import Ring, _dist2, _knn_exact, knn_bruteforce_np  # noqa: F401
 
 #: packing offset for (i, j) -> one 56-bit key; |i| at res 14 is ~7M,
 #: well under 2^27
@@ -118,122 +101,47 @@ def knn_hex_kring(queries: DataFrame, neighbors: DataFrame, k: int,
                   res: int = None,
                   q_id: str = "q_id", q_lat: str = "q_lat",
                   q_lon: str = "q_lon", n_id: str = "n_id",
-                  n_lat: str = "n_lat", n_lon: str = "n_lon",
-                  max_levels: int = 32,
-                  neighbor_stats=None) -> DataFrame:
+                  n_lat: str = "n_lat", n_lon: str = "n_lon") -> DataFrame:
     """Hex-k-ring exact kNN -> (q_id, n_id, rnk).  ``res=None``
-    auto-tunes from neighbor density and dispatches small neighbor
-    tables to the broadcast numpy kernel; an explicit ``res`` forces
-    the k-ring path (tests / forced-escalation benches)."""
-    stats = neighbor_stats
-    if res is None and stats is None:
-        stats = _neighbor_stats(neighbors, n_lat, n_lon)
-    if res is None:
-        if not stats["n"] or stats["n"] <= SMALL_NEIGHBORS:
-            return knn_bruteforce_np(queries, neighbors, k, q_id, q_lat,
-                                     q_lon, n_id, n_lat, n_lon)
-        res = tune_res(stats["n"], stats["lat0"], stats["lat1"],
-                       stats["lon0"], stats["lon1"], k)
-    res = max(MIN_RES, min(MAX_KNN_RES, int(res)))
-
+    auto-tunes from neighbor density (tune_res) and dispatches small
+    neighbor tables to the broadcast numpy kernel; an explicit ``res``
+    forces the k-ring path (tests / forced-escalation benches).
+    Queries with a NULL coordinate get no rows."""
     offs = F.array(*[F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
                      for di, dj in _FLOWER])
-    d2 = _dist2(F.col(q_lat), F.col(q_lon), F.col(n_lat), F.col(n_lon))
-    w = Window.partitionBy(q_id).orderBy(F.col("_d2").asc(),
-                                         F.col(n_id).asc())
-    goods = []
-    escal = queries.select(q_id, q_lat, q_lon).localCheckpoint(eager=True)
-    est = None
-    n_escal = None          # unknown until the first level's residue agg
-    level = -1
 
-    while n_escal is None or n_escal > 0:
-        level += 1
-        res_l = res - level
+    def ring(res0: int, level: int, escal: DataFrame) -> Ring:
+        res_l = max(MIN_RES, min(MAX_KNN_RES, int(res0))) - level
         if res_l < MIN_RES - 24:
             raise RuntimeError("knn_hex_kring: escalation underflow")
         a = hx.apothem_deg(res_l)
         rc = hx.circumradius_deg(res_l)
-        covered = 2.0 * _SQRT3 * a - 2.0 * rc      # from ANY query position
-        final_level = False
-        if est is not None:
-            if stats is None:
-                stats = _neighbor_stats(neighbors, n_lat, n_lon)
-            if not stats["n"]:
-                break
-            span_lat = max(stats["lat1"], est["lat1"]) \
-                - min(stats["lat0"], est["lat0"])
-            span_lon = max(stats["lon1"], est["lon1"]) \
-                - min(stats["lon0"], est["lon0"])
-            diag = math.hypot(span_lat, span_lon)
-            final_level = covered >= diag or level >= max_levels
-            if final_level and covered < diag:
-                _LOG.warning(
-                    "knn_hex_kring: max_levels=%d exhausted at res=%d "
-                    "(covered %.3g < extent diag %.3g) — results for %d "
-                    "escalated queries are not proven complete",
-                    max_levels, res_l, covered, diag, n_escal)
-
-        qi, qj, qkey, qcx, qcy = _cell_cols(F.col(q_lat), F.col(q_lon),
-                                            res_l)
+        qi, qj, _, qcx, qcy = _cell_cols(F.col(q_lat), F.col(q_lon), res_l)
         qc = escal.select(
             q_id, q_lat, q_lon, qi.alias("_qi"), qj.alias("_qj"),
             qcx.alias("_cx"), qcy.alias("_cy"))
-        # qdist: query offset from its home-cell center (for the margin)
+        # qdist: query offset from its home-cell center
         qdist = F.sqrt(_dist2(F.col(q_lat), F.col(q_lon),
                               F.col("_cy"), F.col("_cx")))
         q_exp = (qc.select(q_id, q_lat, q_lon, "_qi", "_qj",
-                           qdist.alias("_qd"), F.explode(offs).alias("_o"))
-                 .select(q_id, q_lat, q_lon, "_qd",
+                           (F.lit(2.0 * _SQRT3 * a - rc) - qdist)
+                           .alias("_margin"),
+                           F.explode(offs).alias("_o"))
+                 .select(q_id, q_lat, q_lon, "_margin",
                          ((F.col("_qi") + F.col("_o.di") + F.lit(_KEY_OFF))
                           * F.lit(1 << _KEY_SHIFT)
                           + (F.col("_qj") + F.col("_o.dj")
                              + F.lit(_KEY_OFF))).alias("_hk")))
-        if n_escal is not None and n_escal <= BROADCAST_ESCALATED:
-            q_exp = F.broadcast(q_exp)
         _, _, nkey, _, _ = _cell_cols(F.col(n_lat), F.col(n_lon), res_l)
         nc = neighbors.select(n_id, n_lat, n_lon, nkey.alias("_hk"))
-        margin = F.lit(2.0 * _SQRT3 * a - rc) - F.col("_qd")
-        topk = (nc.join(q_exp, "_hk", "inner")
-                .withColumn("_d2", d2)
-                .withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k)
-                .withColumn("_margin", margin)
-                .select(q_id, n_id, "rnk", "_d2", "_margin")
-                .localCheckpoint(eager=True))
-        if final_level:
-            goods.append(topk.select(q_id, n_id, "rnk"))
-            _LOG.info("knn_hex_kring: level %d (res=%d) is final, %d "
-                      "queries resolved exactly", level, res_l, n_escal)
-            n_escal = 0
-            break
-        per_q = (topk.groupBy(q_id)
-                 .agg(F.count(F.lit(1)).alias("_n"),
-                      F.max("_d2").alias("_kth"),
-                      F.first("_margin").alias("_margin")))
-        complete = per_q.filter(
-            (F.col("_n") >= k)
-            & (F.col("_kth") < F.col("_margin") * F.col("_margin"))
-            & (F.col("_margin") > 0))
-        nxt = (escal.join(complete.select(q_id), q_id, "left_anti")
-               .select(q_id, q_lat, q_lon).localCheckpoint(eager=True))
-        est = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(q_lat).alias("lat0"), F.max(q_lat).alias("lat1"),
-            F.min(q_lon).alias("lon0"), F.max(q_lon).alias("lon1")).first()
-        prev = n_escal
-        escal, n_escal = nxt, est["n"]
-        nxt_ids = nxt.select(q_id)
-        if n_escal <= BROADCAST_ESCALATED:
-            nxt_ids = F.broadcast(nxt_ids)
-        goods.append(topk.join(nxt_ids, q_id, "left_anti")
-                     .select(q_id, n_id, "rnk"))
-        _LOG.info("knn_hex_kring: level %d (res=%d) resolved %s, %d "
-                  "escalate", level, res_l,
-                  "n/a" if prev is None else str(prev - n_escal), n_escal)
+        covered = 2.0 * _SQRT3 * a - 2.0 * rc
+        return Ring(q_exp, nc, ["_hk"],
+                    lambda span_lat, span_lon:
+                        covered >= math.hypot(span_lat, span_lon),
+                    f"res={res_l}")
 
-    result = goods[0]
-    for g in goods[1:]:
-        result = result.unionByName(g)
-    _LOG.info("knn_hex_kring: done after %d levels", level + 1)
-    return result
+    return _knn_exact(
+        "knn_hex_kring", queries, neighbors, k, res,
+        lambda s: tune_res(s["n"], s["lat0"], s["lat1"], s["lon0"],
+                           s["lon1"], k),
+        ring, None, (q_id, q_lat, q_lon, n_id, n_lat, n_lon))

@@ -161,11 +161,6 @@ def pip_join(points: DataFrame, polygons: List[Tuple[int, Sequence[Tuple[float, 
 _CELL_STRIDE = 1 << 20
 
 
-def _cell_key(row, col):
-    """Pack a (lat-row, lon-col) grid cell into one long join key."""
-    return (row + _CELL_STRIDE // 2) * _CELL_STRIDE + (col + _CELL_STRIDE // 2)
-
-
 def pip_join_partitioned(points: DataFrame, polygons: DataFrame,
                          cell_deg: float = 5.0,
                          lat_col: str = "lat", lon_col: str = "lon",

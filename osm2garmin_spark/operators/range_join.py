@@ -10,32 +10,37 @@ detection.
 
 Scale design (no cartesian product, ever):
 
-1. **Grid blocking.** Both sides key to a lat/lon grid whose cell sizes
-   are RIGOROUS sphere bounds, not small-angle approximations:
+1. **Latitude-banded grid blocking.** Both sides key to a lat/lon grid
+   whose cell sizes are RIGOROUS sphere bounds, not small-angle
+   approximations:
 
-   - ``cell_lat``: central angle >= |dphi|, so d <= R implies
-     |dlat| <= degrees(R / R_EARTH) exactly.
-   - ``cell_lon``: from hav(d) >= cos(phi1)cos(phi2) sin^2(dlon/2):
-     d <= R implies dlon <= 2 asin(min(1, sin(R/2R_E) / cos(phi_cap)))
-     where phi_cap bounds |lat| over both inputs (caller-supplied
-     ``max_abs_lat``; the poles degenerate under lon blocking, which is
-     the documented limit of lat/lon grids — polar data wants the S2
-     index, geo/s2.py).
-
-   The longitude ring is UNIFORM: n_x = max(3, floor(360 / cell_lon))
-   cells of width 360/n_x >= cell_lon each, indexed by
-   ix = floor((lon + 180) * n_x / 360) mod n_x. A fixed-width grid with
-   ceil() would leave a narrower residual cell before the antimeridian
-   seam, putting wrapped pairs 2 cells apart (mod n_x) and silently
-   dropping them; uniform widths restore the adjacency invariant around
-   the whole circle. Any qualifying pair is therefore in the same or an
-   adjacent cell.
-2. **3x3 ring explode on the LEFT side only** (9 rows per left point —
-   same discipline as operators/knn.py: the big right side keys once
-   and shuffles once on the cell key, never explodes).
-3. **Dateline wrap**: the lon cell index is taken modulo the ring width,
-   so the last cell and cell 0 are adjacent; the haversine's
-   sin(dlon/2) is periodic, so the refine needs no unwrapping.
+   - rows: ``cell_lat`` = degrees(R / R_EARTH) — the central angle is
+     >= |dphi|, so d <= R implies |dlat| <= cell_lat exactly; row
+     iy = floor((lat + 90) / cell_lat).
+   - lon lattice PER ROW: from hav(d) >= cos(phi1)cos(phi2)
+     sin^2(dlon/2), a pair within R whose b-point sits in row r has
+     dlon <= W(r) = 2 asin(min(1, sin(R/2R_E) / mincos3(r))), where
+     mincos3(r) is the least cos(lat) over rows r-1..r+1 clamped to the
+     caller-supplied ``max_abs_lat`` (points past the cap raise; the
+     poles degenerate under lon blocking, the documented limit of
+     lat/lon grids — polar data wants the S2 index, geo/s2.py). Row r
+     gets a UNIFORM ring of n_x(r) = max(1, floor(360 / W(r))) cells of
+     width 360/n_x(r) >= W(r), indexed by
+     ix = floor((lon + 180) * n_x(r) / 360) mod n_x(r). A fixed-width
+     grid with ceil() would leave a narrower residual cell before the
+     antimeridian seam, putting wrapped pairs 2 cells apart and silently
+     dropping them; uniform widths keep any qualifying pair in the same
+     or an adjacent cell of the b-point's row, around the whole circle.
+     Rows where W(r) spans the globe collapse to one cell.
+2. **Ring explode on the LEFT side only**: rows iy-1..iy+1 and, in each
+   target row's own lattice, the <= 3 cells around the point's lon
+   (<= 9 rows per left point — same discipline as operators/knn.py: the
+   big right side keys once and shuffles once on the cell key, never
+   explodes).
+3. **Dateline wrap**: every lon cell index is taken modulo its row's
+   ring width — lon = +180 lands in cell 0 with -180, and the last cell
+   and cell 0 are adjacent; the haversine's sin(dlon/2) is periodic, so
+   the refine needs no unwrapping.
 4. **Equi-join on (cell_x, cell_y)** — hash-partitioned, AQE-skew-
    splittable — then cheap exact |dlat|/|dlon| pre-rejects and a
    COMPARISON-ONLY trig residual: per-ROW quantities (half-angle
@@ -263,11 +268,12 @@ def range_join_within(a: DataFrame, b: DataFrame, radius_km: float,
                 .drop("_g"))
 
     def with_ix(df: DataFrame) -> DataFrame:
-        # base cell in the row's own ring: lon in [-180, 180) keeps the
-        # floor inside [0, n_x-1] with no mod
+        # base cell in the row's own ring, wrapped: lon = +180.0 (or any
+        # lon outside [-180, 180)) would otherwise index past the ring
         nx = n_x_of_row.cast("double")
         ix = F.floor((F.col("lon") + F.lit(180.0)) * nx / F.lit(360.0))
-        return df.withColumn("_ix", F.when(~F.isnan(F.col("lon")), ix))
+        return df.withColumn("_ix", F.when(~F.isnan(F.col("lon")),
+                                           F.pmod(ix, n_x_of_row)))
 
     ak = keyed(a, "a")
     bk = with_ix(keyed(b, "b"))

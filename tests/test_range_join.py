@@ -83,6 +83,18 @@ def test_dateline_residual_cell_regression(spark):
     assert [(r["a_id"], r["b_id"]) for r in got] == [(0, 0)]
 
 
+def test_lon_plus_180_wraps_to_cell_zero(spark):
+    """ADVICE (i): lon = +180.0 is the -180.0 meridian. Its base lon cell
+    floor(360 * n_x / 360) = n_x must wrap to cell 0; unwrapped, a +180.0
+    b-point sat outside every ring and its pairs were dropped. All four
+    pairs here are < 2 km apart."""
+    a = _mkdf(spark, [0, 1], [10.0, 10.0], [179.99, 180.0], "a_id")
+    b = _mkdf(spark, [0, 1], [10.0, 10.0], [180.0, -179.99], "b_id")
+    got = sorted((r["a_id"], r["b_id"]) for r in
+                 range_join_within(a, b, 150.0).collect())
+    assert got == [(0, 0), (0, 1), (1, 0), (1, 1)]
+
+
 def test_dateline_seam_sweep_matches_brute_force(spark):
     """Property sweep across the seam: points packed into the last few
     degrees on both sides of +-180 at several radii (several ring

@@ -17,7 +17,6 @@ Prints one JSON line. Usage: python tools/bench_knn_skew.py [cores]
 """
 
 import json
-import math
 import os
 import sys
 import time
@@ -30,7 +29,7 @@ from osm2garmin_spark.expressions import derived_lat, derived_lon  # noqa: E402
 from osm2garmin_spark.operators.knn import (SMALL_NEIGHBORS,       # noqa: E402
                                             knn_grid,
                                             knn_grid_stratified,
-                                            plan_strata)
+                                            plan_strata, tune_cell_deg)
 from osm2garmin_spark.session import get_spark                     # noqa: E402
 
 K = 3
@@ -91,11 +90,7 @@ def main():
     assert n_total > SMALL_NEIGHBORS
 
     # the global auto-tuned cell (same formula knn_grid uses)
-    from osm2garmin_spark.operators.knn import _neighbor_stats
-    stats = _neighbor_stats(neighbors, "n_lat", "n_lon")
-    area = (stats["lat1"] - stats["lat0"]) * (stats["lon1"] - stats["lon0"])
-    global_cell = max(math.sqrt(max(8.0 * K, 64.0)
-                                / (9.0 * (stats["n"] / area))), 1e-6)
+    global_cell = tune_cell_deg(neighbors, K)
 
     # band assignment from the SAME plan the stratified operator uses
     pstats, cell_to_stratum, stratum_cells, (step_lat, step_lon) = \
