@@ -4,9 +4,10 @@ dataset hold the SAME ROWS without sorting or shuffling either copy.
 The replication/compaction audit primitive the lineage layer's
 per-tile digests need at table scale (pipeline/lineage.py digests one
 tile at a time): after a backfill, a compaction
-(`pipeline/lineage.compact`), an engine migration, or a CDC apply
-(`streaming/incremental.apply_changes`), recompute the checksums on
-both sides and compare k smallish numbers instead of 2×10^12 rows.
+(`pipeline/lineage.LineageStore.compact`), an engine migration, or a
+CDC apply (`streaming/incremental.apply_changes`), recompute the
+checksums on both sides and compare k smallish numbers instead of
+2×10^12 rows.
 
 Design — every piece chosen so a SQL oracle reproduces it bit-for-bit
 and so the aggregation is commutative (partition-order free):

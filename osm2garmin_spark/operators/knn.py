@@ -77,6 +77,12 @@ def _dist2(qlat, qlon, nlat, nlon):
     return dx * dx + dy * dy
 
 
+def _has_coords(lat: str, lon: str):
+    """Neither coordinate is NULL: the range_join_within contract. A
+    neighbor with a NULL coordinate is no candidate on any kNN path."""
+    return F.col(lat).isNotNull() & F.col(lon).isNotNull()
+
+
 def knn_broadcast(queries: DataFrame, neighbors: DataFrame, k: int,
                   q_id: str = "q_id", q_lat: str = "q_lat", q_lon: str = "q_lon",
                   n_id: str = "n_id", n_lat: str = "n_lat", n_lon: str = "n_lon",
@@ -84,7 +90,7 @@ def knn_broadcast(queries: DataFrame, neighbors: DataFrame, k: int,
     """Exact kNN with a broadcast neighbor table → (q_id, n_id, rnk).
     Catalyst shape (NLJ + window) — the independent cross-check twin of
     the numpy kernel below; tests compare the two."""
-    j = queries.join(F.broadcast(neighbors))
+    j = queries.join(F.broadcast(neighbors.filter(_has_coords(n_lat, n_lon))))
     d2 = _dist2(F.col(q_lat), F.col(q_lon), F.col(n_lat), F.col(n_lon))
     w = Window.partitionBy(q_id).orderBy(d2.asc(), F.col(n_id).asc())
     return (j.withColumn("rnk", F.row_number().over(w))
@@ -107,7 +113,8 @@ def knn_bruteforce_np(queries: DataFrame, neighbors: DataFrame, k: int,
     import pandas as pd
 
     spark = queries.sparkSession
-    rows = neighbors.select(n_id, n_lat, n_lon).collect()
+    rows = (neighbors.filter(_has_coords(n_lat, n_lon))
+            .select(n_id, n_lat, n_lon).collect())
     q_id_t = queries.schema[q_id].dataType.simpleString()
     n_id_t = neighbors.schema[n_id].dataType.simpleString()
     schema = f"{q_id} {q_id_t}, {n_id} {n_id_t}, rnk int"
@@ -252,8 +259,9 @@ def _knn_exact(name: str, queries: DataFrame, neighbors: DataFrame, k: int,
     already has. ``ring(base, level, escal)`` is the cell scheme: the
     ``Ring`` of that level for the escalated queries ``escal``.
 
-    Queries with a NULL coordinate are dropped before the dispatch, so
-    no path emits rows for them (the range_join_within contract).
+    Queries and neighbors with a NULL coordinate are dropped before the
+    dispatch, so no path emits rows for such a query or ranks such a
+    neighbor (the range_join_within contract).
 
     The escalated side broadcasts into the candidate join while it stays
     under BROADCAST_ESCALATED rows; the good rows of a level are its top-k
@@ -274,8 +282,8 @@ def _knn_exact(name: str, queries: DataFrame, neighbors: DataFrame, k: int,
     preemptible.
     """
     q_id, q_lat, q_lon, n_id, n_lat, n_lon = cols
-    queries = queries.filter(F.col(q_lat).isNotNull()
-                             & F.col(q_lon).isNotNull())
+    queries = queries.filter(_has_coords(q_lat, q_lon))
+    neighbors = neighbors.filter(_has_coords(n_lat, n_lon))
     if base is None:
         if stats is None:
             stats = _extent(neighbors, n_lat, n_lon)

@@ -11,9 +11,8 @@ import time
 
 import pytest
 
-from osm2garmin_spark.pipeline.catalog import (
-    CatalogClient, CatalogServer, commit_with_catalog, read_catalog_lineage)
-from osm2garmin_spark.pipeline.lineage import CommitConflict
+from osm2garmin_spark.pipeline.catalog import CatalogClient, CatalogServer
+from osm2garmin_spark.pipeline.lineage import CommitConflict, LineageStore
 
 
 @pytest.fixture()
@@ -31,20 +30,20 @@ def _stats_df(spark, tile_ids):
 
 def test_catalog_cas_conflict_and_state(spark, tmp_path, catalog):
     d = str(tmp_path / "cat")
-    got_a = commit_with_catalog(d, spark, "assign", "a",
-                                _stats_df(spark, [1, 2, 3]), catalog)
+    got_a = LineageStore(d, catalog=catalog).commit(
+        spark, "assign", "a", _stats_df(spark, [1, 2, 3]))
     assert got_a == {1, 2, 3}
     # second writer overlapping {2,3}: write-time drop, only 4 commits
-    got_b = commit_with_catalog(d, spark, "assign", "b",
-                                _stats_df(spark, [2, 3, 4]), catalog)
+    got_b = LineageStore(d, catalog=catalog).commit(
+        spark, "assign", "b", _stats_df(spark, [2, 3, 4]))
     assert got_b == {4}
     # 'error' mode raises
     with pytest.raises(CommitConflict, match="already committed"):
-        commit_with_catalog(d, spark, "assign", "c",
-                            _stats_df(spark, [4, 5]), catalog,
-                            on_conflict="error")
+        LineageStore(d, catalog=catalog).commit(
+            spark, "assign", "c", _stats_df(spark, [4, 5]),
+            on_conflict="error")
     from osm2garmin_spark.pipeline.catalog import _table_key
-    st = catalog.state(_table_key(d, None))
+    st = catalog.state(_table_key(d))
     assert st["seq"] == 2 and len(st["manifests"]) == 2
 
 
@@ -54,16 +53,16 @@ def test_catalog_roots_isolated_by_default(spark, tmp_path, catalog):
     conflict read never tries to open blob names committed under root A
     (a shared plain name would FileNotFoundError mid-commit)."""
     da, db = str(tmp_path / "rootA"), str(tmp_path / "rootB")
-    assert commit_with_catalog(da, spark, "assign", "a",
-                               _stats_df(spark, [1, 2]), catalog) == {1, 2}
+    assert LineageStore(da, catalog=catalog).commit(
+        spark, "assign", "a", _stats_df(spark, [1, 2])) == {1, 2}
     # same tiles under root B: a DIFFERENT table, no conflict, no
     # cross-root manifest reads
-    assert commit_with_catalog(db, spark, "assign", "b",
-                               _stats_df(spark, [1, 2]), catalog) == {1, 2}
+    assert LineageStore(db, catalog=catalog).commit(
+        spark, "assign", "b", _stats_df(spark, [1, 2])) == {1, 2}
     la = {r["tile_id"]: r["run_id"] for r in
-          read_catalog_lineage(spark, da, catalog).collect()}
+          LineageStore(da, catalog=catalog).read(spark).collect()}
     lb = {r["tile_id"]: r["run_id"] for r in
-          read_catalog_lineage(spark, db, catalog).collect()}
+          LineageStore(db, catalog=catalog).read(spark).collect()}
     assert la == {1: "a", 2: "a"} and lb == {1: "b", 2: "b"}
 
 
@@ -85,9 +84,8 @@ def test_catalog_eight_writer_race_one_row_per_tile(spark, tmp_path, catalog):
                 chunk = mine[i:i + rng.randint(2, 6)]
                 i += len(chunk)
                 time.sleep(rng.random() * 0.01)
-                got |= commit_with_catalog(
-                    d, spark, "assign", f"w{widx}",
-                    _stats_df(spark, chunk), catalog)
+                got |= LineageStore(d, catalog=catalog).commit(
+                    spark, "assign", f"w{widx}", _stats_df(spark, chunk))
             committed[widx] = got
         except Exception as e:  # noqa: BLE001
             errors[widx] = e
@@ -106,7 +104,8 @@ def test_catalog_eight_writer_race_one_row_per_tile(spark, tmp_path, catalog):
         union_input |= set(random.Random(2000 + widx).sample(tiles, k=16))
     assert set(all_claimed) == union_input
 
-    lin = read_catalog_lineage(spark, d, catalog).filter("stage = 'assign'")
+    lin = LineageStore(d, catalog=catalog).read(spark) \
+        .filter("stage = 'assign'")
     per_tile = lin.groupBy("tile_id").count().collect()
     assert {r["tile_id"] for r in per_tile} == union_input
     assert all(r["count"] == 1 for r in per_tile)
@@ -119,8 +118,8 @@ def test_catalog_orphan_blobs_invisible(spark, tmp_path, catalog):
     import pyarrow.parquet as pq
 
     d = str(tmp_path / "orph")
-    commit_with_catalog(d, spark, "assign", "ok",
-                        _stats_df(spark, [1, 2]), catalog)
+    LineageStore(d, catalog=catalog).commit(
+        spark, "assign", "ok", _stats_df(spark, [1, 2]))
     mdir = os.path.join(d, "_lineage_catalog")
     orphan = pa.table({
         "stage": pa.array(["assign"]), "tile_id": pa.array([99], pa.int32()),
@@ -130,7 +129,7 @@ def test_catalog_orphan_blobs_invisible(spark, tmp_path, catalog):
         "ts": pa.array([0.0], pa.float64())})
     pq.write_table(orphan, os.path.join(mdir, "deadbeef-orphan.parquet"))
 
-    lin = read_catalog_lineage(spark, d, catalog)
+    lin = LineageStore(d, catalog=catalog).read(spark)
     tiles = {r["tile_id"] for r in lin.collect()}
     assert tiles == {1, 2}          # orphan's tile 99 never appears
 
@@ -176,7 +175,7 @@ def test_catalog_backed_pipeline_eight_writers(spark, tmp_path, catalog):
         t.join()
     assert not errors, errors
 
-    lin = read_catalog_lineage(spark, d, catalog)
+    lin = LineageStore(d, catalog=catalog).read(spark)
     per_tile = lin.filter("stage = 'assign'").groupBy("tile_id") \
                   .count().collect()
     assert per_tile and all(r["count"] == 1 for r in per_tile)
@@ -212,7 +211,7 @@ def test_catalog_wal_survives_restart(spark, tmp_path):
     r1 = run_tiling_resumable(points, d, max_nodes=300, run_id="w1",
                               fail_after_tiles=2, catalog=c1)
     assert r1["processed"] == 2
-    st_before = c1.state(_table_key(d, None))
+    st_before = c1.state(_table_key(d))
     # plus an orphan blob the catalog never referenced (crash pre-CAS)
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -231,9 +230,9 @@ def test_catalog_wal_survives_restart(spark, tmp_path):
     srv2 = CatalogServer(wal_path=wal).start()
     c2 = CatalogClient(srv2.url)
     try:
-        st_after = c2.state(_table_key(d, None))
+        st_after = c2.state(_table_key(d))
         assert st_after == st_before
-        lin = read_catalog_lineage(spark, d, c2)
+        lin = LineageStore(d, catalog=c2).read(spark)
         assert 999 not in {r["tile_id"] for r in lin.collect()}
 
         r2 = run_tiling_resumable(points, d, max_nodes=300, run_id="w2",
@@ -241,7 +240,7 @@ def test_catalog_wal_survives_restart(spark, tmp_path):
         assert r2["skipped"] == 2
         assert r2["processed"] == r2["tiles"] - 2
 
-        lin = read_catalog_lineage(spark, d, c2)
+        lin = LineageStore(d, catalog=c2).read(spark)
         per_tile = lin.filter("stage = 'assign'").groupBy("tile_id") \
                       .count().collect()
         assert per_tile and all(r["count"] == 1 for r in per_tile)
@@ -273,33 +272,28 @@ def test_catalog_wal_torn_tail_tolerated(tmp_path):
 
 
 def test_catalog_compaction(spark, tmp_path, catalog):
-    """compact_catalog rolls N referenced blobs into one summary via the
+    """compact() rolls N referenced blobs into one summary via the
     CAS'd replaces swap; rows verbatim, covered blobs deleted, conflict
     detection still works against the summary."""
-    from osm2garmin_spark.pipeline.catalog import compact_catalog
-
     d = str(tmp_path / "ccomp")
+    store = LineageStore(d, catalog=catalog)
     for i, chunk in enumerate(([1, 2], [3], [4, 5])):
-        commit_with_catalog(d, spark, "assign", f"r{i}",
-                            _stats_df(spark, chunk), catalog,
-                            attempt=f"a{i}")
-    before = sorted(map(tuple,
-                        read_catalog_lineage(spark, d, catalog).collect()))
+        store.commit(spark, "assign", f"r{i}", _stats_df(spark, chunk),
+                     attempt=f"a{i}")
+    before = sorted(map(tuple, store.read(spark).collect()))
 
-    res = compact_catalog(d, catalog)
+    res = store.compact()
     assert res["compacted"] == 3
     mdir = os.path.join(d, "_lineage_catalog")
     blobs = [n for n in os.listdir(mdir) if n.endswith(".parquet")]
     assert len(blobs) == 1 and blobs[0].startswith("summary-")
 
-    after = sorted(map(tuple,
-                       read_catalog_lineage(spark, d, catalog).collect()))
+    after = sorted(map(tuple, store.read(spark).collect()))
     assert after == before                       # rows preserved verbatim
-    assert compact_catalog(d, catalog)["compacted"] == 0   # idempotent
+    assert store.compact()["compacted"] == 0   # idempotent
 
     # conflict detection consults the summary: overlapping tiles dropped
-    got = commit_with_catalog(d, spark, "assign", "late",
-                              _stats_df(spark, [5, 6]), catalog)
+    got = store.commit(spark, "assign", "late", _stats_df(spark, [5, 6]))
     assert got == {6}
 
 
@@ -308,8 +302,6 @@ def test_catalog_compaction_races_commits(spark, tmp_path, catalog):
     tile survives; compactor CAS losses and committer refetch-on-deleted-
     blob paths both exercised."""
     import random
-
-    from osm2garmin_spark.pipeline.catalog import compact_catalog
 
     d = str(tmp_path / "ccomp_race")
     tiles = list(range(300, 332))
@@ -326,9 +318,8 @@ def test_catalog_compaction_races_commits(spark, tmp_path, catalog):
                 chunk = mine[i:i + rng.randint(2, 5)]
                 i += len(chunk)
                 time.sleep(rng.random() * 0.01)
-                got |= commit_with_catalog(
-                    d, spark, "assign", f"w{widx}",
-                    _stats_df(spark, chunk), catalog,
+                got |= LineageStore(d, catalog=catalog).commit(
+                    spark, "assign", f"w{widx}", _stats_df(spark, chunk),
                     attempt=f"w{widx}-c{i}")
             committed[widx] = got
         except Exception as e:  # noqa: BLE001
@@ -339,7 +330,7 @@ def test_catalog_compaction_races_commits(spark, tmp_path, catalog):
         try:
             while not done_flag.is_set():
                 time.sleep(rng.random() * 0.02)
-                compact_catalog(d, catalog)
+                LineageStore(d, catalog=catalog).compact()
         except Exception as e:  # noqa: BLE001
             errors[f"c{cidx}"] = e
 
@@ -361,7 +352,8 @@ def test_catalog_compaction_races_commits(spark, tmp_path, catalog):
         union_input |= set(random.Random(5000 + widx).sample(tiles, k=20))
     assert set(all_claimed) == union_input
 
-    lin = read_catalog_lineage(spark, d, catalog).filter("stage = 'assign'")
+    lin = LineageStore(d, catalog=catalog).read(spark) \
+        .filter("stage = 'assign'")
     per_tile = lin.groupBy("tile_id").count().collect()
     assert {r["tile_id"] for r in per_tile} == union_input
     assert all(r["count"] == 1 for r in per_tile)
@@ -376,9 +368,8 @@ def test_catalog_state_loss_warns(spark, tmp_path):
     d = str(tmp_path / "lost")
     srv = CatalogServer().start()           # no WAL: in-memory only
     try:
-        commit_with_catalog(d, spark, "assign", "a",
-                            _stats_df(spark, [1, 2]),
-                            CatalogClient(srv.url))
+        LineageStore(d, catalog=CatalogClient(srv.url)).commit(
+            spark, "assign", "a", _stats_df(spark, [1, 2]))
     finally:
         srv.stop()
 
@@ -386,9 +377,8 @@ def test_catalog_state_loss_warns(spark, tmp_path):
     try:
         with _warnings.catch_warnings(record=True) as w:
             _warnings.simplefilter("always")
-            commit_with_catalog(d, spark, "assign", "b",
-                                _stats_df(spark, [3]),
-                                CatalogClient(srv2.url))
+            LineageStore(d, catalog=CatalogClient(srv2.url)).commit(
+                spark, "assign", "b", _stats_df(spark, [3]))
         assert any("seq=0" in str(x.message) for x in w), \
             [str(x.message) for x in w]
     finally:
@@ -483,8 +473,8 @@ def test_catalog_missing_blob_raises_not_spins(spark, tmp_path, catalog):
     from osm2garmin_spark.pipeline.lineage import _purge_manifest_cache
 
     d = str(tmp_path / "lost")
-    assert commit_with_catalog(d, spark, "assign", "a",
-                               _stats_df(spark, [1, 2]), catalog) == {1, 2}
+    assert LineageStore(d, catalog=catalog).commit(
+        spark, "assign", "a", _stats_df(spark, [1, 2])) == {1, 2}
     mdir = _manifest_dir(d)
     blobs = [os.path.join(mdir, n) for n in os.listdir(mdir)]
     for p in blobs:
@@ -492,10 +482,10 @@ def test_catalog_missing_blob_raises_not_spins(spark, tmp_path, catalog):
     _purge_manifest_cache(blobs)            # simulate a fresh process
 
     with pytest.raises(RuntimeError, match="stayed missing"):
-        read_catalog_lineage(spark, d, catalog)
+        LineageStore(d, catalog=catalog).read(spark)
     with pytest.raises(RuntimeError, match="stayed missing"):
-        commit_with_catalog(d, spark, "assign", "b",
-                            _stats_df(spark, [3]), catalog)
+        LineageStore(d, catalog=catalog).commit(
+            spark, "assign", "b", _stats_df(spark, [3]))
 
 
 def test_resume_lands_mid_compaction_wal_rescan(spark, tmp_path):
@@ -508,9 +498,7 @@ def test_resume_lands_mid_compaction_wal_rescan(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from osm2garmin_spark.expressions import derived_lat, derived_lon
-    from osm2garmin_spark.pipeline.catalog import (_manifest_dir,
-                                                   _table_key,
-                                                   compact_catalog)
+    from osm2garmin_spark.pipeline.catalog import _manifest_dir, _table_key
     from osm2garmin_spark.pipeline.lineage import (read_committed_assigned,
                                                    run_tiling_resumable)
 
@@ -543,7 +531,7 @@ def test_resume_lands_mid_compaction_wal_rescan(spark, tmp_path):
     # still names
     srv2 = CatalogServer(wal_path=wal).start()
     c2 = CatalogClient(srv2.url)
-    table = _table_key(d, None)
+    table = _table_key(d)
     assert len(c2.state(table)["manifests"]) == 2
     real_state, raced = c2.state, {"n": 0, "fnf": 0}
 
@@ -563,7 +551,7 @@ def test_resume_lands_mid_compaction_wal_rescan(spark, tmp_path):
         st = real_state(t)
         if t == table and raced["n"] == 0:
             raced["n"] += 1
-            assert compact_catalog(d, CatalogClient(srv2.url))[
+            assert LineageStore(d, catalog=CatalogClient(srv2.url)).compact()[
                 "compacted"] == 2
             for n in st["manifests"]:       # compactor really deleted them
                 assert not os.path.exists(os.path.join(_manifest_dir(d), n))
@@ -588,7 +576,7 @@ def test_resume_lands_mid_compaction_wal_rescan(spark, tmp_path):
     srv3 = CatalogServer(wal_path=wal).start()
     c3 = CatalogClient(srv3.url)
     try:
-        lin = read_catalog_lineage(spark, d, c3)
+        lin = LineageStore(d, catalog=c3).read(spark)
         per_tile = lin.filter("stage = 'assign'").groupBy("tile_id") \
                       .count().collect()
         assert len(per_tile) == r["tiles"]

@@ -48,3 +48,29 @@ def test_bruteforce_nan_coordinates_match_broadcast(spark, k):
     assert got == want
     ranked = sorted((rnk, n) for qid, n, rnk in got if qid == 0)
     assert ranked[:2] == [(1, 5), (2, 7)]
+
+
+def _null_neighbor_ops():
+    # the two single-table operators, the escalation loop (explicit
+    # cell/res) and its small-table dispatch (auto)
+    return {
+        "broadcast": lambda q, n, k: knn_broadcast(q, n, k),
+        "bruteforce_np": lambda q, n, k: knn_bruteforce_np(q, n, k),
+        "grid_cell": lambda q, n, k: knn_grid(q, n, k, cell_deg=0.5),
+        "grid_auto": lambda q, n, k: knn_grid(q, n, k),
+        "hex_res": lambda q, n, k: knn_hex_kring(q, n, k, res=9),
+        "hex_auto": lambda q, n, k: knn_hex_kring(q, n, k),
+    }
+
+
+@pytest.mark.parametrize("k", [2, 3])
+@pytest.mark.parametrize("op", sorted(_null_neighbor_ops()))
+def test_null_coordinate_neighbors_are_dropped(spark, op, k):
+    """A neighbor with a NULL coordinate is never ranked, on every path:
+    knn_broadcast ranked it first and knn_bruteforce_np last, while the
+    escalation loop dropped it."""
+    q = spark.createDataFrame([(0, 0.0, 0.0)], _QS)
+    nb = spark.createDataFrame(
+        [(5, 0.1, 0.0), (6, None, 0.0), (7, 0.3, 0.0)], _NS)
+    got = sorted(map(tuple, _null_neighbor_ops()[op](q, nb, k).collect()))
+    assert got == [(0, 5, 1), (0, 7, 2)]

@@ -95,8 +95,16 @@ def test_double_commit_reader_keeps_one_attempt(spark, points, tmp_path):
     (assigned.withColumn("attempt", F.lit("w2-racer"))
      .write.mode("append").partitionBy("attempt", "tile_id")
      .parquet(os.path.join(d, "assigned")))
-    store.commit(spark, "assign", "w2", tile_digests(assigned, "event_id"),
-                 attempt="w2-racer")
+    # a commit detects the first writer's tiles and drops them, so the
+    # racer's manifest is claimed through the backend directly
+    import pyarrow.parquet as pq
+    from osm2garmin_spark.pipeline.lineage import (collect_tile_rows,
+                                                   manifest_table)
+    blob = store.backend.new_blob(summary=False)
+    pq.write_table(manifest_table(
+        collect_tile_rows(tile_digests(assigned, "event_id")), "assign",
+        "w2", "w2-racer", time.time()), blob)
+    store.backend.claim(store.state()[0], blob, [])
 
     assert _read_assigned(spark, d).count() == base  # no duplicates
 
@@ -272,7 +280,7 @@ def test_eight_writer_chunked_commit_race(spark, tmp_path):
                 time.sleep(rng.random() * 0.01)
                 got |= store.commit(
                     spark, "assign", f"w{widx}", stats_df(chunk),
-                    attempt=f"w{widx}-c{i}", detect_conflicts=True)
+                    attempt=f"w{widx}-c{i}")
             committed[widx] = got
         except Exception as e:  # noqa: BLE001
             errors[widx] = e
@@ -356,10 +364,9 @@ def test_commit_conflict_error_mode(spark, points, tmp_path):
     stats = tile_digests(assigned, "event_id")
     with pytest.raises(CommitConflict, match="already committed"):
         store.commit(spark, "assign", "racer", stats, attempt="racer-a",
-                     detect_conflicts=True, on_conflict="error")
+                     on_conflict="error")
     # and 'drop' mode commits nothing when everything is taken
-    got = store.commit(spark, "assign", "racer", stats, attempt="racer-b",
-                       detect_conflicts=True)
+    got = store.commit(spark, "assign", "racer", stats, attempt="racer-b")
     assert got == set()
 
 
@@ -427,7 +434,7 @@ def test_stats_free_manifests_stay_unprunable(spark, points, tmp_path):
         "n_rows": pa.array([1], pa.int64()), "digest": pa.array([7], pa.int64()),
         "run_id": pa.array(["old"]), "attempt": pa.array(["old-a"]),
         "ts": pa.array([0.0], pa.float64())})
-    seq = store._max_seq() + 1
+    seq = store.state()[0] + 1
     pq.write_table(legacy, os.path.join(store.lineage_dir,
                                         f"m{seq:08d}-old.parquet"))
 
@@ -495,7 +502,7 @@ def test_compact_handles_legacy_manifests(spark, points, tmp_path):
         "n_rows": pa.array([1], pa.int64()), "digest": pa.array([7], pa.int64()),
         "run_id": pa.array(["old"]), "attempt": pa.array(["old-a"]),
         "ts": pa.array([0.0], pa.float64())})
-    seq = store._max_seq() + 1
+    seq = store.state()[0] + 1
     pq.write_table(legacy, os.path.join(store.lineage_dir,
                                         f"m{seq:08d}-old.parquet"))
     n_before = store.read(spark).count()
@@ -542,7 +549,7 @@ def test_compact_races_with_committers(spark, tmp_path):
                 time.sleep(rng.random() * 0.01)
                 got |= store.commit(
                     spark, "assign", f"w{widx}", stats_df(chunk),
-                    attempt=f"w{widx}-c{i}", detect_conflicts=True)
+                    attempt=f"w{widx}-c{i}")
             committed[widx] = got
         except Exception as e:  # noqa: BLE001
             errors[widx] = e
@@ -597,8 +604,7 @@ def test_conflict_read_is_incremental(spark, tmp_path):
     opens = []
     for t in range(n):
         before = manifest_read_count()
-        store.commit(spark, "assign", "w", stats_df(t), attempt=f"a{t}",
-                     detect_conflicts=True)
+        store.commit(spark, "assign", "w", stats_df(t), attempt=f"a{t}")
         opens.append(manifest_read_count() - before)
     # commit k sees k prior manifests but opens at most the ONE that is
     # new since the previous conflict read (0 or 1, never k)
@@ -635,8 +641,7 @@ def test_auto_compaction_hook_catalog(spark, points, tmp_path):
     to one summary blob, committed history stays visible."""
     from osm2garmin_spark.pipeline.catalog import (CatalogClient,
                                                    CatalogServer,
-                                                   _table_key,
-                                                   read_catalog_lineage)
+                                                   _table_key)
 
     srv = CatalogServer().start()
     try:
@@ -647,9 +652,9 @@ def test_auto_compaction_hook_catalog(spark, points, tmp_path):
         r = run_tiling_resumable(points, d, max_nodes=300, run_id="c2",
                                  catalog=c, compact_after=1)
         assert r.get("compacted", 0) == 2
-        st = c.state(_table_key(d, None))
+        st = c.state(_table_key(d))
         assert len(st["manifests"]) == 1
-        lin = read_catalog_lineage(spark, d, c)
+        lin = LineageStore(d, catalog=c).read(spark)
         per_tile = lin.filter("stage = 'assign'").groupBy("tile_id") \
                       .count().collect()
         assert len(per_tile) == r["tiles"]

@@ -1,17 +1,19 @@
-"""N-commit lineage bench: per-commit conflict-read cost (VERDICT r4 #1).
+"""N-commit lineage bench: per-commit conflict-read cost on both CAS
+backends (the hard-link filesystem backend and the catalog service,
+started in-process).
 
 Measures the number of manifest FILES physically opened by each commit's
-conflict read, three ways:
+state and conflict read, three ways per backend:
 
-- cold      cache cleared before every commit — the round-3/4 behavior,
-            O(total committed manifests) per commit, O(N^2) over the job
+- cold      cache cleared before every commit — O(total committed
+            manifests) per commit, O(N^2) over the job
 - cached    immutable-manifest cache on (the default) — each commit opens
             only manifests that appeared since its last read: O(new) = 1
 - compacted cache cleared AND the store compacted every `compact_every`
             commits — the fresh-process bound: summary + tail, never the
             full history
 
-Prints one JSON line with the per-commit open counts and totals.
+Prints one JSON line with the per-backend totals.
 
 Usage: python tools/bench_lineage_commits.py [N] [compact_every]
 """
@@ -23,12 +25,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm2garmin_spark.pipeline import lineage as L   # noqa: E402
+from osm2garmin_spark.pipeline.catalog import (      # noqa: E402
+    CatalogClient, CatalogServer)
 from osm2garmin_spark.session import get_spark       # noqa: E402
 
 
-def run_mode(spark, root, n, clear_cache, compact_every=0):
-    store = L.LineageStore(root)
-
+def run_mode(spark, store, n, clear_cache, compact_every=0):
     def stats_df(t):
         return spark.createDataFrame(
             [(t, 1, t)], "tile_id int, n_rows long, digest long")
@@ -38,8 +40,7 @@ def run_mode(spark, root, n, clear_cache, compact_every=0):
         if clear_cache:
             L._MANIFEST_TILE_CACHE.clear()
         before = L.manifest_read_count()
-        store.commit(spark, "assign", "bench", stats_df(t),
-                     attempt=f"a{t}", detect_conflicts=True)
+        store.commit(spark, "assign", "bench", stats_df(t), attempt=f"a{t}")
         opens.append(L.manifest_read_count() - before)
         if compact_every and (t + 1) % compact_every == 0:
             store.compact()
@@ -55,15 +56,26 @@ def main():
 
     out = {"metric": "lineage_commit_conflict_reads", "n_commits": n,
            "compact_every": compact_every, "unit": "manifest file opens"}
-    with tempfile.TemporaryDirectory() as td:
-        cold = run_mode(spark, f"{td}/cold", n, clear_cache=True)
-        cached = run_mode(spark, f"{td}/cached", n, clear_cache=False)
-        comp = run_mode(spark, f"{td}/comp", n, clear_cache=True,
-                        compact_every=compact_every)
-    for name, opens in (("cold", cold), ("cached", cached),
-                        ("compacted_cold", comp)):
-        out[name] = {"total": sum(opens), "max_per_commit": max(opens),
-                     "last_commit": opens[-1]}
+    srv = CatalogServer().start()
+    try:
+        with tempfile.TemporaryDirectory() as td:
+            for backend, client in (("fs", None),
+                                    ("catalog", CatalogClient(srv.url))):
+                def store(mode):
+                    return L.LineageStore(f"{td}/{backend}-{mode}", client)
+
+                modes = {
+                    "cold": run_mode(spark, store("cold"), n, True),
+                    "cached": run_mode(spark, store("cached"), n, False),
+                    "compacted_cold": run_mode(spark, store("comp"), n, True,
+                                               compact_every),
+                }
+                out[backend] = {
+                    name: {"total": sum(o), "max_per_commit": max(o),
+                           "last_commit": o[-1]}
+                    for name, o in modes.items()}
+    finally:
+        srv.stop()
     print(json.dumps(out))
     spark.stop()
 
