@@ -14,7 +14,8 @@ sort-refine index) to Spark:
   square 3×3 rings whose cell doubles per level (the reference's 512×512
   grid accelerator re-expressed as a join key, SplitProcessor.java:412-518)
   and 7-cell hex flowers one resolution coarser per level.
-  ``knn_grid_stratified`` runs knn_grid per local-density band.
+  ``knn_grid_stratified`` runs knn_grid per density stratum, the strata
+  planned on the tiler's quadtree leaves over the neighbor table.
 
 The loop, per level (the schemes differ only in the cell keys, the
 margin and the coverage test, which a scheme returns as a ``Ring``):
@@ -36,7 +37,7 @@ of <= SMALL_NEIGHBORS rows dispatch to the numpy kernel, and the loop
 itself runs 1-row aggregates (round 2 collect()ed the whole table for
 escalation, which OOMs the driver in exactly the both-sides-large case —
 VERDICT r2 item 1 / ADVICE r2). Queries with a NULL coordinate get no
-rows from any of the loop's operators.
+rows from any operator, and neighbors with one are never ranked.
 
 Distance = squared euclidean in degrees (deterministic double arithmetic:
 dx*dx + dy*dy, ties broken by neighbor id) — same tie discipline as the
@@ -45,11 +46,19 @@ reference's argmax-by-population naming (Main.nameAreas:377-391).
 
 from __future__ import annotations
 
+import functools
 import logging
 import math
-from typing import Callable, List, NamedTuple, Optional
+from collections import Counter
+from typing import Any, Callable, List, NamedTuple, Optional, Tuple
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from ..expressions import map_unit
+from ..geo.area import Area
+from ..geo.units import to_degrees
+from ..split.density import collect_density
+from ..split.quadtree import CellIndex, split_area
 
 _LOG = logging.getLogger(__name__)
 
@@ -69,6 +78,12 @@ MAX_LEVELS = 24
 #: smallest square cell (~2.4 m): clamps explicit and tuned cells so the
 #: MAX_LEVELS-th doubling still covers the whole planet
 MIN_CELL_DEG = 360.0 / 2 ** MAX_LEVELS
+#: density-scan resolution of knn_grid_stratified's plan: the tiler's
+#: default (cells of 2**11 map units, ~0.044°)
+STRATA_RES = 13
+#: the plan's quadtree splits until a leaf holds <= n / STRATA_LEAVES
+#: neighbors
+STRATA_LEAVES = 64
 
 
 def _dist2(qlat, qlon, nlat, nlon):
@@ -79,7 +94,8 @@ def _dist2(qlat, qlon, nlat, nlon):
 
 def _has_coords(lat: str, lon: str):
     """Neither coordinate is NULL: the range_join_within contract. A
-    neighbor with a NULL coordinate is no candidate on any kNN path."""
+    query with a NULL coordinate gets no rows and a neighbor with one is
+    no candidate, on every kNN operator."""
     return F.col(lat).isNotNull() & F.col(lon).isNotNull()
 
 
@@ -90,7 +106,8 @@ def knn_broadcast(queries: DataFrame, neighbors: DataFrame, k: int,
     """Exact kNN with a broadcast neighbor table → (q_id, n_id, rnk).
     Catalyst shape (NLJ + window) — the independent cross-check twin of
     the numpy kernel below; tests compare the two."""
-    j = queries.join(F.broadcast(neighbors.filter(_has_coords(n_lat, n_lon))))
+    j = (queries.filter(_has_coords(q_lat, q_lon))
+         .join(F.broadcast(neighbors.filter(_has_coords(n_lat, n_lon)))))
     d2 = _dist2(F.col(q_lat), F.col(q_lon), F.col(n_lat), F.col(n_lon))
     w = Window.partitionBy(q_id).orderBy(d2.asc(), F.col(n_id).asc())
     return (j.withColumn("rnk", F.row_number().over(w))
@@ -185,7 +202,8 @@ def knn_bruteforce_np(queries: DataFrame, neighbors: DataFrame, k: int,
                 "rnk": np.tile(np.arange(1, kk + 1), m),
             })
 
-    return queries.select(q_id, q_lat, q_lon).mapInPandas(kernel, schema)
+    return (queries.filter(_has_coords(q_lat, q_lon))
+            .select(q_id, q_lat, q_lon).mapInPandas(kernel, schema))
 
 
 def _cell_for_density(density: float, k: int) -> float:
@@ -193,7 +211,7 @@ def _cell_for_density(density: float, k: int) -> float:
     expected neighbors at ``density`` points per deg²:
     cell = sqrt(target / (9·density)), clamped below at MIN_CELL_DEG.
     The one copy of the formula: knn_grid's auto cell, tune_cell_deg and
-    plan_strata's per-stratum cells all call it."""
+    plan_strata's per-leaf cells all call it."""
     target = max(8.0 * k, 64.0)
     return max(math.sqrt(target / (9.0 * density)), MIN_CELL_DEG)
 
@@ -393,7 +411,7 @@ def knn_grid(queries: DataFrame, neighbors: DataFrame, k: int,
     (_cell_for_density) after the small-table dispatch; an explicit
     cell_deg forces the grid path. Cells are clamped below at
     MIN_CELL_DEG. ``neighbor_stats``: a caller-supplied _extent
-    row — knn_grid_stratified already aggregated it once for its banding,
+    row — knn_grid_stratified already aggregated it once for its plan,
     and without the passthrough every per-stratum call re-scanned the
     large neighbor table on escalation. Queries with a NULL coordinate
     get no rows.
@@ -404,9 +422,9 @@ def knn_grid(queries: DataFrame, neighbors: DataFrame, k: int,
     per-query top-k absorbs this (partition = one query's candidates,
     sorted and cut at k), but hot-cell join output is the residual skew
     cost of exact kNN on clustered data. ``knn_grid_stratified`` below
-    automates the mitigation: queries are banded by LOCAL neighbor
-    density (a coarse density grid, the same artifact the quadtree
-    split computes) and each band runs this operator with a cell tuned
+    automates the mitigation: queries are grouped by the LOCAL neighbor
+    density of their quadtree leaf (the tiler's own split, run on the
+    neighbor table) and each group runs this operator with a cell tuned
     to its own density.
     """
     offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -442,93 +460,69 @@ def knn_grid(queries: DataFrame, neighbors: DataFrame, k: int,
                       neighbor_stats, (q_id, q_lat, q_lon, n_id, n_lat, n_lon))
 
 
-def plan_strata(neighbors: DataFrame, k: int, coarse: int = 64,
-                n_strata: int = 4, n_lat: str = "n_lat",
-                n_lon: str = "n_lon"):
-    """Density-stratified cell plan for ``knn_grid_stratified``.
+class StrataPlan(NamedTuple):
+    """The density plan of ``knn_grid_stratified`` (``plan_strata``).
+    Stratum ``s`` runs knn_grid with a cell of 2**s degrees."""
+    #: the neighbor _extent row: knn_grid's coverage test reads it
+    stats: Any
+    #: (leaf Area in map units, stratum) per quadtree leaf, in split order
+    leaves: List[Tuple[Area, int]]
+    #: the stratum of the most leaves, which also takes every query
+    #: outside the leaves; None when the plan has no leaves
+    default: Optional[int]
 
-    One distributed groupBy over a fixed ``coarse``×``coarse`` grid spanning
-    the neighbor extent (≤ coarse² occupied rows reach the driver — the
-    same bounded-occupied-cells contract as split/density.collect_density),
-    then driver-side banding: occupied cells are sorted by count and cut
-    into ``n_strata`` bands of roughly equal POINT MASS (equal-population,
-    not equal-cell-count, so a metro band really is dense), and each band
-    gets _cell_for_density applied to its OWN density:
-    cell_s = sqrt(max(8k, 64) / (9 · density_s)).
+    def stratum_of(self, lat: Column, lon: Column) -> Column:
+        """The stratum of a query at (lat, lon) degrees: the first
+        non-default leaf whose closed map-unit bounds hold it, else the
+        default. Every query gets exactly one stratum, so a query on a
+        shared leaf edge is answered once."""
+        lat_mu, lon_mu = map_unit(lat), map_unit(lon)
+        col = F              # F.when opens the chain, Column.when extends it
+        for a, s in self.leaves:
+            if s != self.default:
+                col = col.when(lat_mu.between(a.min_lat, a.max_lat)
+                               & lon_mu.between(a.min_long, a.max_long), s)
+        return F.lit(self.default) if col is F else col.otherwise(self.default)
 
-    Returns (stats_row, cell_to_stratum, stratum_cells, steps):
-    - stats_row: the 1-row neighbor count/extent aggregate (None if empty)
-    - cell_to_stratum: [(ix, iy, stratum)] for occupied coarse cells
-    - stratum_cells: {stratum: cell_deg}, stratum 0 = sparsest band
-    - steps: (step_lat, step_lon) of the coarse grid — the ONE definition
-      of the banding grid; knn_grid_stratified derives its query-side
-      cell indices from these same values so the two sites can never
-      desynchronize.
-    """
-    import numpy as np
 
+def plan_strata(neighbors: DataFrame, k: int, n_lat: str = "n_lat",
+                n_lon: str = "n_lon") -> StrataPlan:
+    """Density plan for ``knn_grid_stratified``: the tiler's quadtree
+    split (split.density.collect_density + split.quadtree.split_area) run
+    on the neighbor table.
+
+    Two scans: the _extent aggregate (the true extent, which knn_grid's
+    coverage test needs, polar rows included) and the density scan at
+    STRATA_RES, whose occupied cells reach the driver as in the tiler.
+    The split stops once a leaf holds <= n / STRATA_LEAVES neighbors, so
+    leaves shrink exactly where the density spikes and a leaf's count over
+    its area is its local density at adaptive resolution. A leaf's
+    stratum is the power-of-two floor of _cell_for_density at that
+    density, which gathers leaves of similar density into one knn_grid
+    call. Neighbors beyond ±85° or with a NULL coordinate reach no leaf;
+    with no leaf left the plan is empty (``default`` None)."""
+    neighbors = neighbors.filter(_has_coords(n_lat, n_lon))
     stats = _extent(neighbors, n_lat, n_lon)
-    if not stats["n"]:
-        return None, [], {}, (0.0, 0.0)
-    span_lat = max(stats["lat1"] - stats["lat0"], 1e-9)
-    span_lon = max(stats["lon1"] - stats["lon0"], 1e-9)
-    step_lat = span_lat / coarse
-    step_lon = span_lon / coarse
-    ix = F.least(F.floor((F.col(n_lat) - F.lit(stats["lat0"])) / F.lit(step_lat)),
-                 F.lit(coarse - 1)).cast("int")
-    iy = F.least(F.floor((F.col(n_lon) - F.lit(stats["lon0"])) / F.lit(step_lon)),
-                 F.lit(coarse - 1)).cast("int")
-    rows = (neighbors.groupBy(ix.alias("_ix"), iy.alias("_iy"))
-            .agg(F.count(F.lit(1)).alias("_cnt")).collect())
-    cnts = np.array([r["_cnt"] for r in rows], dtype=np.int64)
-    n_strata = max(1, min(n_strata, len(rows)))
-    # SPIKE carve-out (round 5): a coarse cell far above the typical
-    # density would otherwise be lumped with hundreds of average cells to
-    # fill its equal-mass band, diluting that band's density estimate
-    # ~(band cells)x and defeating the per-band tuning exactly where it
-    # matters (measured: a 60k-point 0.05-deg hot cell inside a 660k
-    # uniform corpus got band cell 0.66 deg instead of ~0.05 deg —
-    # tools/bench_knn_skew.py). Cells with count >= 64x the MEDIAN
-    # occupied cell (the point where the global/band cell drags >= 64x
-    # the candidate target through the join) become their OWN stratum,
-    # tuned to their exact single-cell density; the 2*n_strata HIGHEST
-    # qualify (bounded strata count — knn_grid_stratified fans branches
-    # over driver threads). The median, not the mean: the mean includes
-    # the spikes themselves, so several hot cells inflate it past the
-    # threshold and the carve-out self-defeats exactly on multi-spike
-    # skew (20 cells of 10000 over 1000 cells of 1 push the mean to
-    # ~197 and 64x the mean past every spike; the median stays 1).
-    # Spike ids start at n_strata, sorted by count so ids stay stable;
-    # the remaining cells get the equal-point-mass bands 0..n_strata-1.
-    stratum = np.empty(len(rows), dtype=np.int64)
-    spike_thresh = 64.0 * float(np.median(cnts))
-    spike_idx = np.nonzero(cnts.astype(np.float64) >= spike_thresh)[0]
-    spike_idx = spike_idx[np.argsort(cnts[spike_idx], kind="stable")]
-    spike_idx = spike_idx[-2 * n_strata:]
-    for rank, i in enumerate(spike_idx.tolist()):
-        stratum[i] = n_strata + rank
-    rest = np.setdiff1d(np.arange(len(rows)), spike_idx)
-    if len(rest):
-        order = rest[np.argsort(cnts[rest], kind="stable")]
-        csum = np.cumsum(cnts[order])
-        rest_total = max(int(csum[-1]), 1)
-        band_of_sorted = np.minimum(
-            ((csum - 1) * n_strata) // rest_total,
-            n_strata - 1).astype(np.int64)
-        stratum[order] = band_of_sorted
-    cell_to_stratum = [(int(rows[i]["_ix"]), int(rows[i]["_iy"]),
-                        int(stratum[i])) for i in range(len(rows))]
-    cell_area = step_lat * step_lon
-    stratum_cells = {}
-    for s in sorted(set(stratum.tolist())):
-        sel = stratum == s
-        stratum_cells[int(s)] = _cell_for_density(
-            cnts[sel].sum() / (sel.sum() * cell_area), k)
-    return stats, cell_to_stratum, stratum_cells, (step_lat, step_lon)
+    grid, exact = collect_density(neighbors, n_lat, n_lon, STRATA_RES)
+    if exact is None:
+        return StrataPlan(stats, [], None)
+    areas = split_area(grid, exact, STRATA_RES,
+                       max(stats["n"] // STRATA_LEAVES, 1))
+    windows = [(grid.lon_to_x(a.min_long), grid.lon_to_x(a.max_long),
+                grid.lat_to_y(a.min_lat), grid.lat_to_y(a.max_lat))
+               for a in areas]
+    index = CellIndex(*grid.cells(), grid.width, grid.height)
+    leaves = []
+    for a, (colsum, _) in zip(areas, index.window_sums(windows)):
+        density = int(colsum.sum()) / (to_degrees(a.height)
+                                       * to_degrees(a.width))
+        # frexp: cell = m·2**e with 0.5 <= m < 1, so 2**(e-1) <= cell
+        leaves.append((a, math.frexp(_cell_for_density(density, k))[1] - 1))
+    default = Counter(s for _, s in leaves).most_common(1)[0][0]
+    return StrataPlan(stats, leaves, default)
 
 
 def knn_grid_stratified(queries: DataFrame, neighbors: DataFrame, k: int,
-                        coarse: int = 64, n_strata: int = 4,
                         q_id: str = "q_id", q_lat: str = "q_lat",
                         q_lon: str = "q_lon", n_id: str = "n_id",
                         n_lat: str = "n_lat", n_lon: str = "n_lon"
@@ -538,87 +532,51 @@ def knn_grid_stratified(queries: DataFrame, neighbors: DataFrame, k: int,
 
     One global cell targets ~64 ring candidates at the AVERAGE density, so
     queries inside a metro at local density D× the average drag ~64·D
-    candidate rows through the join. Here queries are banded by the local
-    neighbor density of their coarse grid cell (plan_strata: equal-point-
-    mass bands over a coarse density grid) and each band runs knn_grid
-    with a cell tuned to its OWN density — dense bands get small cells,
-    sparse bands big ones, and every band's per-ring candidate count sits
-    near the target instead of scaling with local density. Escalation
-    keeps each band exact regardless of its cell, so the union is
-    bit-identical to knn_broadcast (pinned in tests/test_knn.py).
+    candidate rows through the join. Here each query takes the stratum of
+    its quadtree leaf (``plan_strata``; ``StrataPlan.stratum_of``) and
+    each stratum runs knn_grid with a cell tuned to its leaves' OWN
+    density: dense leaves get small cells, sparse ones big cells, and
+    every stratum's per-ring candidate count sits near the target instead
+    of scaling with local density. Escalation keeps each stratum exact
+    whatever its cell, so the union is bit-identical to knn_broadcast
+    (pinned in tests/test_knn.py).
 
-    The stratum map is ≤ coarse² rows and broadcast into the query-side
-    assignment join; queries in unoccupied cells (no neighbors nearby)
-    fall to the sparsest existing band (the largest cell). Each
-    stratum's knn_grid call is an independent DataFrame branch off ONE
-    checkpointed assignment — the union composes like any other plan.
+    A plan with one stratum is one knn_grid call at its cell; an empty
+    plan (no neighbor inside ±85°) is one auto-tuned knn_grid call.
+    Otherwise the queries are assigned once (a checkpointed projection,
+    no shuffle), strata without queries are skipped, and each remaining
+    stratum's knn_grid call is an independent branch run from a driver
+    thread that inherits the caller's job group.
     """
-    spark = queries.sparkSession
+    from concurrent.futures import ThreadPoolExecutor
+    from pyspark.util import inheritable_thread_target
 
-    def _empty():
-        q_id_t = queries.schema[q_id].dataType.simpleString()
-        n_id_t = neighbors.schema[n_id].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{q_id} {q_id_t}, {n_id} {n_id_t}, rnk int")
-
-    stats, cell_map, stratum_cells, (step_lat, step_lon) = plan_strata(
-        neighbors, k, coarse, n_strata, n_lat, n_lon)
-    if stats is None:
-        # no neighbors at all — empty result with the contract schema
-        return _empty()
-    m = spark.createDataFrame(cell_map, "_ix int, _iy int, _stratum int")
-    qix = F.greatest(F.least(
-        F.floor((F.col(q_lat) - F.lit(stats["lat0"])) / F.lit(step_lat)),
-        F.lit(coarse - 1)), F.lit(0)).cast("int")
-    qiy = F.greatest(F.least(
-        F.floor((F.col(q_lon) - F.lit(stats["lon0"])) / F.lit(step_lon)),
-        F.lit(coarse - 1)), F.lit(0)).cast("int")
-    # queries in unoccupied coarse cells (no neighbors nearby) fall to
-    # the sparsest EXISTING band — not literal stratum 0, which can be
-    # empty under heavy skew (equal-point-mass banding puts the first
-    # sorted cell in band >= 1 when it alone exceeds total/n_strata
-    # points) and an empty default band would silently drop its queries
-    sparsest = min(stratum_cells)
+    plan = plan_strata(neighbors, k, n_lat, n_lon)
+    kw = dict(q_id=q_id, q_lat=q_lat, q_lon=q_lon,
+              n_id=n_id, n_lat=n_lat, n_lon=n_lon, neighbor_stats=plan.stats)
+    if len({s for _, s in plan.leaves}) <= 1:
+        cell = None if plan.default is None else 2.0 ** plan.default
+        return knn_grid(queries, neighbors, k, cell_deg=cell, **kw)
     assigned = (queries.select(q_id, q_lat, q_lon,
-                               qix.alias("_ix"), qiy.alias("_iy"))
-                .join(F.broadcast(m), ["_ix", "_iy"], "left")
-                .withColumn("_stratum",
-                            F.coalesce(F.col("_stratum"), F.lit(sparsest)))
-                .select(q_id, q_lat, q_lon, "_stratum")
+                               plan.stratum_of(F.col(q_lat), F.col(q_lon))
+                               .alias("_stratum"))
                 .localCheckpoint(eager=True))
-    # one tiny agg on the checkpointed assignment: strata with zero
-    # queries are skipped outright — knn_grid would otherwise still run
-    # its full eager job cadence (checkpoints + per-level aggregates)
-    # for an empty branch
-    occupied = {r["_stratum"] for r in
-                assigned.select("_stratum").distinct().collect()}
-    todo = [(s, c) for s, c in sorted(stratum_cells.items())
-            if s in occupied]
+    # strata with zero queries are skipped: knn_grid would still run its
+    # full eager job cadence (checkpoints + per-level aggregates) for them.
+    # An empty query set still runs the default stratum, for the schema.
+    todo = sorted(r["_stratum"] for r in
+                  assigned.select("_stratum").distinct().collect()) \
+        or [plan.default]
 
-    def _run(sc):
-        s, cell_s = sc
+    @inheritable_thread_target(queries.sparkSession)
+    def _run(s):
         qs = assigned.filter(F.col("_stratum") == s).drop("_stratum")
-        return knn_grid(qs, neighbors, k, cell_deg=cell_s,
-                        q_id=q_id, q_lat=q_lat, q_lon=q_lon,
-                        n_id=n_id, n_lat=n_lat, n_lon=n_lon,
-                        neighbor_stats=stats)
+        return knn_grid(qs, neighbors, k, cell_deg=2.0 ** s, **kw)
 
     # the branches are independent exact pipelines whose cost at bench
     # scale is dominated by eager-action latency (checkpoints + per-level
     # 1-row aggregates), not data — run them CONCURRENTLY from driver
-    # threads so those fixed latencies overlap; the Spark scheduler
-    # interleaves the jobs and each branch's plan is identical to the
-    # sequential build (results deterministic, pinned by the equality
-    # tests)
-    if len(todo) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=len(todo)) as ex:
-            parts = list(ex.map(_run, todo))
-    else:
-        parts = [_run(sc) for sc in todo]
-    if not parts:
-        return _empty()
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    return result
+    # threads so those fixed latencies overlap
+    with ThreadPoolExecutor(max_workers=len(todo)) as ex:
+        parts = list(ex.map(_run, todo))
+    return functools.reduce(DataFrame.unionByName, parts)

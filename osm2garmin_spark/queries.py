@@ -1414,11 +1414,12 @@ SELECT c_custkey, s_suppkey, rnk FROM ranked WHERE rnk <= 3
 
 def knn_stratified_customers_events(spark, sf_dir):
     """Density-stratified grid kNN (VERDICT r3 #4): customer points → 3
-    nearest event points, with queries banded by local event density and
-    each band joining at its own tuned cell (operators/knn.py
-    knn_grid_stratified). Escalation keeps every band exact, so the
-    DuckDB oracle is the plain cross-join window — the same exactness
-    contract as knn_customers_suppliers, now over the stratified path."""
+    nearest event points, with queries grouped by the event density of
+    their quadtree leaf and each group joining at its own tuned cell
+    (operators/knn.py knn_grid_stratified). Escalation keeps every
+    stratum exact, so the DuckDB oracle is the plain cross-join window —
+    the same exactness contract as knn_customers_suppliers, now over the
+    stratified path."""
     from .operators.knn import knn_grid_stratified
 
     par = spark.sparkContext.defaultParallelism
@@ -1436,7 +1437,7 @@ def knn_stratified_customers_events(spark, sf_dir):
         F.col("event_id").alias("n_id"),
         derived_lat(F.col("event_id")).alias("n_lat"),
         derived_lon(F.col("event_id")).alias("n_lon")).localCheckpoint()
-    out = knn_grid_stratified(cust, ev, k=3, coarse=32, n_strata=3)
+    out = knn_grid_stratified(cust, ev, k=3)
     return out.select(F.col("q_id").alias("c_custkey"),
                       F.col("n_id").alias("event_id"), "rnk")
 

@@ -105,16 +105,9 @@ def test_grid_auto_small_neighbors_still_uses_bruteforce(spark, monkeypatch):
     assert out.count() == 2 and calls == [1]
 
 
-def test_stratified_matches_broadcast_and_cuts_candidates(spark):
-    """VERDICT r3 #4: a metro cell at 100x the base density. Per-stratum
-    cell sizing must (a) return bit-identical results to knn_broadcast
-    (escalation keeps every band exact regardless of its cell) and
-    (b) beat the single global tuned cell on level-0 candidate-pair
-    volume — the global cell targets the AVERAGE density, so metro
-    queries otherwise drag ~100x the target candidates into the join."""
-    from osm2garmin_spark.operators.knn import (knn_grid_stratified,
-                                                plan_strata, tune_cell_deg)
-
+def _metro_corpus(spark):
+    """4000 neighbors uniform over 10x10 deg plus 4000 in a 1-deg metro
+    at 100x the base density; 150 queries of each kind."""
     rng = np.random.default_rng(11)
     base = 4000
     nb = pd.DataFrame({
@@ -131,11 +124,34 @@ def test_stratified_matches_broadcast_and_cuts_candidates(spark):
         "q_lon": np.concatenate([rng.uniform(0, 10, 150),
                                  rng.uniform(4.5, 5.5, 150)]),
     })
+    return q, nb
+
+
+def _strata(spark, plan, points):
+    """plan.stratum_of at each (lat, lon) point, in order."""
+    from pyspark.sql import functions as F
+    df = spark.createDataFrame(
+        [(i, float(lat), float(lon)) for i, (lat, lon) in enumerate(points)],
+        "i long, lat double, lon double")
+    rows = df.select("i", plan.stratum_of(F.col("lat"), F.col("lon"))
+                     .alias("s")).collect()
+    return np.array([r["s"] for r in sorted(rows)])
+
+
+def test_stratified_matches_broadcast_and_cuts_candidates(spark):
+    """VERDICT r3 #4: a metro cell at 100x the base density. Per-stratum
+    cell sizing must (a) return bit-identical results to knn_broadcast
+    (escalation keeps every stratum exact regardless of its cell) and
+    (b) beat the single global tuned cell on level-0 candidate-pair
+    volume — the global cell targets the AVERAGE density, so metro
+    queries otherwise drag ~100x the target candidates into the join."""
+    from osm2garmin_spark.operators.knn import (knn_grid_stratified,
+                                                plan_strata, tune_cell_deg)
+
+    q, nb = _metro_corpus(spark)
     qd, nd = spark.createDataFrame(q), spark.createDataFrame(nb)
 
-    got = sorted(map(tuple,
-                     knn_grid_stratified(qd, nd, 3, coarse=32,
-                                         n_strata=3).collect()))
+    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3).collect()))
     want = sorted(map(tuple, knn_broadcast(qd, nd, 3).collect()))
     assert got == want
 
@@ -154,31 +170,72 @@ def test_stratified_matches_broadcast_and_cuts_candidates(spark):
     cell_global = tune_cell_deg(nd, 3)
     cand_global = candidates([(cell_global, np.ones(len(q), dtype=bool))])
 
-    stats, cell_map, stratum_cells, (step_lat, step_lon) = plan_strata(
-        nd, 3, coarse=32, n_strata=3)
-    smap = {(ix, iy): s for ix, iy, s in cell_map}
-    qix = np.clip(np.floor((q["q_lat"].to_numpy() - stats["lat0"])
-                           / step_lat), 0, 31).astype(int)
-    qiy = np.clip(np.floor((q["q_lon"].to_numpy() - stats["lon0"])
-                           / step_lon), 0, 31).astype(int)
-    q_stratum = np.array([smap.get((x, y), 0) for x, y in zip(qix, qiy)])
-    cand_strat = candidates([(c, q_stratum == s)
-                             for s, c in stratum_cells.items()])
+    plan = plan_strata(nd, 3)
+    q_stratum = _strata(spark, plan, zip(q["q_lat"], q["q_lon"]))
+    cand_strat = candidates([(2.0 ** s, q_stratum == s)
+                             for s in set(q_stratum.tolist())])
 
-    # dense bands must get smaller cells than sparse ones, and the total
-    # join volume must drop by a real margin (typically ~3-5x here)
-    cells = [stratum_cells[s] for s in sorted(stratum_cells)]
-    assert cells[-1] < cells[0]
+    # dense leaves must get smaller cells than sparse ones, and the total
+    # join volume must drop by a real margin (~16x here)
+    s_metro, s_sparse = _strata(spark, plan, [(5.0, 5.0), (1.0, 1.0)])
+    assert s_metro < s_sparse, plan.leaves
     assert cand_strat < 0.6 * cand_global, (cand_strat, cand_global)
 
 
+def test_stratified_leaf_corners_and_outside_queries_answered_once(spark):
+    """Every query takes exactly one stratum: the first non-default leaf
+    whose closed bounds hold it, else the default. Queries on every leaf
+    corner (where closed bounds overlap) and outside every leaf get one
+    answer set each, equal to knn_broadcast."""
+    from osm2garmin_spark.geo.units import to_degrees
+    from osm2garmin_spark.operators.knn import (knn_grid_stratified,
+                                                plan_strata)
+
+    _, nb = _metro_corpus(spark)
+    nd = spark.createDataFrame(nb)
+    plan = plan_strata(nd, 3)
+    assert len({s for _, s in plan.leaves}) > 1, plan.leaves
+    corners = sorted({(to_degrees(lat), to_degrees(lon))
+                      for a, _ in plan.leaves
+                      for lat in (a.min_lat, a.max_lat)
+                      for lon in (a.min_long, a.max_long)})
+    outside = [(-3.0, 4.0), (12.0, 12.0), (5.0, -2.0), (-1.0, -1.0)]
+    pts = corners + outside
+    qd = spark.createDataFrame(pd.DataFrame({
+        "q_id": np.arange(len(pts)),
+        "q_lat": [p[0] for p in pts], "q_lon": [p[1] for p in pts]}))
+    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3).collect()))
+    want = sorted(map(tuple, knn_broadcast(qd, nd, 3).collect()))
+    assert got == want
+
+
+def test_stratified_branches_inherit_job_group(spark):
+    """The stratum branches run from driver threads; every job they
+    launch stays in the caller's job group, so a job group set around
+    the call tags (and cancelJobGroup reaches) all of them."""
+    from osm2garmin_spark.operators.knn import knn_grid_stratified
+
+    q, nb = _metro_corpus(spark)
+    qd, nd = spark.createDataFrame(q), spark.createDataFrame(nb)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("knn-stratified-group", "job-group test", False)
+    try:
+        n = knn_grid_stratified(qd, nd, 3).count()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert n == 3 * len(q)
+    assert tracker.getJobIdsForGroup("knn-stratified-group")
+    assert set(tracker.getJobIdsForGroup(None)) <= before
+
+
 def test_stratified_skewed_single_cell_and_outside_queries(spark):
-    """Degenerate banding: nearly all neighbors in ONE coarse cell makes
-    equal-point-mass banding start above stratum 0, so stratum 0 has no
-    cells — queries landing in unoccupied coarse cells (or outside the
-    neighbor extent entirely) must fall to the sparsest EXISTING band
-    and still be answered exactly; empty bands must be skipped, not
-    crash."""
+    """Nearly all neighbors in one 0.05-deg cell: queries in the hot
+    cell, scattered ones and ones OUTSIDE the neighbor extent entirely
+    must all be answered exactly."""
     from osm2garmin_spark.operators.knn import knn_grid_stratified
 
     rng = np.random.default_rng(31)
@@ -200,45 +257,34 @@ def test_stratified_skewed_single_cell_and_outside_queries(spark):
                                  rng.uniform(-6, -5, 20)]),
     })
     qd, nd = spark.createDataFrame(q), spark.createDataFrame(nb)
-    got = sorted(map(tuple,
-                     knn_grid_stratified(qd, nd, 3, coarse=16,
-                                         n_strata=4).collect()))
+    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3).collect()))
     want = sorted(map(tuple, knn_broadcast(qd, nd, 3).collect()))
     assert got == want
 
 
 def test_plan_strata_spike_cell_gets_own_stratum(spark):
-    """Round 5: a single coarse cell at >=64x the mean occupied-cell
-    density must be carved into its OWN stratum with a cell tuned to its
-    exact density — equal-point-mass banding alone dilutes a sub-half-
-    band spike across hundreds of average cells (measured 0.66 deg band
-    cell for a spike whose true density implies ~0.04 deg). Results stay
-    bit-identical to broadcast."""
-    from osm2garmin_spark.operators.knn import (knn_broadcast,
-                                                knn_grid_stratified,
+    """A 0.05-deg spike holding 1/3 of the mass inside 20x20 deg of
+    uniform neighbors: the quadtree's leaves shrink onto the spike, so
+    the spike's leaf gets a cell tuned to its own density — far below
+    the default (uniform) stratum's cell; a coarse density model dilutes
+    such a spike across its neighbors (measured 0.66 deg for a spike
+    whose true density implies ~0.04 deg). Results stay bit-identical
+    to broadcast."""
+    from osm2garmin_spark.operators.knn import (knn_grid_stratified,
                                                 plan_strata)
 
     rng = np.random.default_rng(17)
     nb = pd.DataFrame({
         "n_id": np.arange(12000),
-        # 8000 uniform over 20x20 deg + a 4000-point 0.05-deg spike
-        # (spike holds 1/3 of mass: below the old half-band threshold)
         "n_lat": np.concatenate([rng.uniform(0, 20, 8000),
                                  10.0 + rng.uniform(0, 0.05, 4000)]),
         "n_lon": np.concatenate([rng.uniform(0, 20, 8000),
                                  10.0 + rng.uniform(0, 0.05, 4000)]),
     })
     nd = spark.createDataFrame(nb)
-    n_strata = 4
-    stats, cell_map, stratum_cells, _ = plan_strata(nd, 3, coarse=32,
-                                                    n_strata=n_strata)
-    spikes = [s for s in stratum_cells if s >= n_strata]
-    assert spikes, stratum_cells
-    # the spike stratum's cell reflects its own density: far below every
-    # equal-mass band's cell
-    band_cells = [c for s, c in stratum_cells.items() if s < n_strata]
-    assert max(stratum_cells[s] for s in spikes) < 0.2 * min(band_cells), \
-        stratum_cells
+    plan = plan_strata(nd, 3)
+    (spike,) = _strata(spark, plan, [(10.025, 10.025)])
+    assert 2.0 ** spike < 0.2 * 2.0 ** plan.default, plan.leaves
 
     q = pd.DataFrame({
         "q_id": np.arange(200),
@@ -248,22 +294,18 @@ def test_plan_strata_spike_cell_gets_own_stratum(spark):
                                  10.0 + rng.uniform(-0.1, 0.15, 100)]),
     })
     qd = spark.createDataFrame(q)
-    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3, coarse=32,
-                                                n_strata=n_strata).collect()))
+    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3).collect()))
     want = sorted(map(tuple, knn_broadcast(qd, nd, 3).collect()))
     assert got == want
 
 
-def test_plan_strata_multi_spike_median_threshold(spark):
-    """Regression (round-5 review): the spike threshold must be computed
-    against the MEDIAN occupied-cell count, not the mean — with hot mass
-    spread over several cells the spikes inflate the mean past 64x and
-    the carve-out self-defeats (here: 20 cells of ~1000 over ~1000 cells
-    of ~2 push 64x-mean to ~1400 > 1000, carving NOTHING; 64x-median is
-    128 and every hot cell qualifies, capped at the 2*n_strata highest).
-    Results stay bit-identical to broadcast."""
-    from osm2garmin_spark.operators.knn import (knn_broadcast,
-                                                knn_grid_stratified,
+def test_plan_strata_multi_spike_leaves(spark):
+    """Twenty 0.05-deg hot boxes of 1000 points over 2000 uniform ones:
+    every box lies in a leaf whose cell is tuned to the box's own
+    ~400k pts/deg^2 density, not to a sparse-diluted region — a
+    threshold over a coarse grid gave only some of them their own
+    stratum. Results stay bit-identical to broadcast."""
+    from osm2garmin_spark.operators.knn import (knn_grid_stratified,
                                                 plan_strata)
 
     rng = np.random.default_rng(23)
@@ -278,17 +320,10 @@ def test_plan_strata_multi_spike_median_threshold(spark):
         "n_lon": np.concatenate([rng.uniform(0, 20, 2000)] + hot_lon),
     })
     nd = spark.createDataFrame(nb)
-    n_strata = 4
-    stats, cell_map, stratum_cells, _ = plan_strata(nd, 3, coarse=32,
-                                                    n_strata=n_strata)
-    spikes = [s for s in stratum_cells if s >= n_strata]
-    # the cap bounds driver-thread fan-out; the 2*n_strata HIGHEST carve
-    # (the old mean rule carved NOTHING here)
-    assert len(spikes) == 2 * n_strata, stratum_cells
-    # every spike cell is tuned to its own ~2500 pts/deg^2 density
-    # (~0.05 deg), not to a sparse-diluted band (the 0.625-deg coarse
-    # step or worse)
-    assert all(stratum_cells[s] < 0.12 for s in spikes), stratum_cells
+    plan = plan_strata(nd, 3)
+    cells = 2.0 ** _strata(spark, plan,
+                           [(cy + 0.025, cx + 0.025) for cy, cx in centers])
+    assert (cells < 0.12).all(), (cells, plan.leaves)
 
     q = pd.DataFrame({
         "q_id": np.arange(150),
@@ -300,7 +335,6 @@ def test_plan_strata_multi_spike_median_threshold(spark):
                                  centers[11][1] + rng.uniform(-0.1, 0.15, 50)]),
     })
     qd = spark.createDataFrame(q)
-    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3, coarse=32,
-                                                n_strata=n_strata).collect()))
+    got = sorted(map(tuple, knn_grid_stratified(qd, nd, 3).collect()))
     want = sorted(map(tuple, knn_broadcast(qd, nd, 3).collect()))
     assert got == want

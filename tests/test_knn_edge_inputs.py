@@ -1,5 +1,5 @@
-"""Exact kNN on edge inputs: NULL-coordinate queries on every path of
-the escalation-loop operators, NaN coordinates in the numpy kernel."""
+"""Exact kNN on edge inputs: NULL-coordinate queries and neighbors on
+every kNN operator, NaN coordinates in the numpy kernel."""
 
 import pytest
 
@@ -12,13 +12,15 @@ _NS = "n_id long, n_lat double, n_lon double"
 
 
 def _null_query_ops():
-    # explicit cell/res: the escalation loop; auto: the small-table kernel
+    # the same paths as _null_neighbor_ops below
     return {
+        "broadcast": lambda q, n: knn_broadcast(q, n, 2),
+        "bruteforce_np": lambda q, n: knn_bruteforce_np(q, n, 2),
         "grid_cell": lambda q, n: knn_grid(q, n, 2, cell_deg=0.5),
         "grid_auto": lambda q, n: knn_grid(q, n, 2),
         "hex_res": lambda q, n: knn_hex_kring(q, n, 2, res=9),
         "hex_auto": lambda q, n: knn_hex_kring(q, n, 2),
-        "stratified": lambda q, n: knn_grid_stratified(q, n, 2, coarse=4),
+        "stratified": lambda q, n: knn_grid_stratified(q, n, 2),
     }
 
 
@@ -26,7 +28,8 @@ def _null_query_ops():
 def test_null_coordinate_queries_get_no_rows(spark, op):
     """A query with a NULL coordinate returns no rows on every path: the
     escalation loop raised TypeError on the NULL extent once only such
-    queries were left, and the small-table kernel returned k rows."""
+    queries were left, and the small-table kernel returned k rows, as
+    knn_broadcast and knn_bruteforce_np called directly did."""
     q = spark.createDataFrame([(0, 0.0, 0.0), (1, None, 0.0)], _QS)
     nb = spark.createDataFrame(
         [(5, 0.1, 0.0), (6, 0.2, 0.0), (7, 0.3, 0.0)], _NS)
@@ -52,7 +55,7 @@ def test_bruteforce_nan_coordinates_match_broadcast(spark, k):
 
 def _null_neighbor_ops():
     # the two single-table operators, the escalation loop (explicit
-    # cell/res) and its small-table dispatch (auto)
+    # cell/res), its small-table dispatch (auto) and the stratified plan
     return {
         "broadcast": lambda q, n, k: knn_broadcast(q, n, k),
         "bruteforce_np": lambda q, n, k: knn_bruteforce_np(q, n, k),
@@ -60,6 +63,7 @@ def _null_neighbor_ops():
         "grid_auto": lambda q, n, k: knn_grid(q, n, k),
         "hex_res": lambda q, n, k: knn_hex_kring(q, n, k, res=9),
         "hex_auto": lambda q, n, k: knn_hex_kring(q, n, k),
+        "stratified": lambda q, n, k: knn_grid_stratified(q, n, k),
     }
 
 
