@@ -15,6 +15,7 @@ comparison deterministic across engines:
 
 from __future__ import annotations
 
+import os
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -64,28 +65,49 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _read_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """`_read`, round-robin repartitioned to `defaultParallelism`. Every
+    shipped table is one parquet row group, and Spark cannot split a row
+    group, so the scan is one task whatever partition count it plans: at
+    sf0.1 on local[4], `events` plans 2 partitions holding [100000, 0]
+    rows and `lineitem` 4 holding [0, 600000, 0, 0]. The per-row work
+    above the scan (derived coordinates, text functions, Python kernels)
+    would then run on one core. Column pruning and filters written above
+    this call still reach the scan below the exchange, so a filtered
+    subset is spread after filtering. The widening is unconditional until
+    a multi-row-group table ships and a benchmark shows the exchange
+    costing time (ROADMAP D3)."""
+    return _read(spark, sf_dir, name).repartition(
+        spark.sparkContext.defaultParallelism)
+
+
+def _parquet_files(sf_dir: str, name: str):
+    """The table's parquet files, sorted, for the footer readers below —
+    None when the path is not flat local parquet: missing, not local, or
+    a directory with no top-level *.parquet files (e.g. a Hive-partitioned
+    layout with files in subdirectories)."""
+    path = f"{sf_dir}/{name}.parquet"
+    if os.path.isdir(path):
+        return sorted(os.path.join(path, f) for f in os.listdir(path)
+                      if f.endswith(".parquet")) or None
+    return [path] if os.path.isfile(path) else None
+
+
 def _parquet_rows(sf_dir: str, name: str) -> int:
     """Row count straight from parquet footer metadata — zero Spark jobs.
     This is the 'lineage/catalog stats' leg of ANN auto-sizing (VERDICT r2
     item 2: a corpus.count() job just to pick planes/nlist is an avoidable
     full pass at scale; an Iceberg catalog would serve this from manifests).
-    Falls back to -1 if the path isn't local-filesystem parquet — and
-    ALSO when a directory holds no top-level *.parquet files (e.g. a
-    Hive-partitioned layout with files in subdirectories): 0 would read
-    as a valid 'empty table' count and callers would skip their
-    documented count() fallback (ADVICE r3)."""
-    import os
+    Falls back to -1 wherever `_parquet_files` finds no flat local parquet
+    (0 would read as a valid 'empty table' count and callers would skip
+    their documented count() fallback, ADVICE r3) or a footer is
+    unreadable."""
+    files = _parquet_files(sf_dir, name)
+    if files is None:
+        return -1
     try:
         import pyarrow.parquet as pq
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(path):
-            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not files:
-                return -1
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in files)
-        return pq.ParquetFile(path).metadata.num_rows
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return -1
 
@@ -100,18 +122,12 @@ def _parquet_sample_vecs(sf_dir: str, name: str, id_col: str, vec_col: str,
     corpus size). Returns a float64 (n, dim) matrix, or None when the
     path isn't flat local parquet (callers fall back to the
     early-terminating limit() scan inside train_ivf_centroids)."""
-    import os
+    files = _parquet_files(sf_dir, name)
+    if files is None:
+        return None
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(path):
-            files = sorted(os.path.join(path, f) for f in os.listdir(path)
-                           if f.endswith(".parquet"))
-            if not files:
-                return None
-        else:
-            files = [path]
         batches, got = [], 0
         for f in files:
             pf = pq.ParquetFile(f)
@@ -132,6 +148,29 @@ def _parquet_sample_vecs(sf_dir: str, name: str, id_col: str, vec_col: str,
                           for v in tbl[vec_col]])
     except Exception:
         return None
+
+
+def _points(df: DataFrame, id_col: str, offset: int = 0) -> DataFrame:
+    """(id, lat, lon) with the derived coordinates of `id_col + offset`
+    (the offset separates tables that share an id range)."""
+    key = F.col(id_col) + offset if offset else F.col(id_col)
+    return df.select(id_col, derived_lat(key).alias("lat"),
+                     derived_lon(key).alias("lon"))
+
+
+def _doc_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 300-doc subset the near-dup queries share (doc_id < 300)."""
+    return _read_spread(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < 300)
+
+
+def _doc_images(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One deterministic synthetic image per document id (pipeline/synth),
+    generated by the opaque mapInPandas kernel above the widened scan."""
+    from .pipeline.synth import IMAGE_SCHEMA, _gen_map
+    ids = _read_spread(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id"))
+    return ids.mapInPandas(_gen_map, schema=IMAGE_SCHEMA)
 
 
 def _cents(col) -> F.Column:
@@ -630,10 +669,7 @@ FROM sess GROUP BY user_id, sess_id
 # ---------------------------------------------------------------------------
 
 def _event_points(spark, sf_dir):
-    ev = _read(spark, sf_dir, "events")
-    return ev.select("event_id",
-                     derived_lat(F.col("event_id")).alias("lat"),
-                     derived_lon(F.col("event_id")).alias("lon"))
+    return _points(_read(spark, sf_dir, "events"), "event_id")
 
 
 _EVENT_POINTS_SQL = (
@@ -1048,21 +1084,10 @@ def range_knn_customers_events(spark, sf_dir):
     distance tree."""
     from .operators.range_join import range_join_within
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
-        F.col("c_custkey"),
-        derived_lat(F.col("c_custkey") + 900000).alias("lat"),
-        derived_lon(F.col("c_custkey") + 900000).alias("lon"))
-    # repartition BEFORE the coordinate derivation: the events table is a
-    # single-row-group scan, and the probe side of the blocked join (and
-    # its per-row trig projection) otherwise runs on one core
-    ev = (_read(spark, sf_dir, "events").select("event_id").repartition(par)
-          .select("event_id",
-                  derived_lat(F.col("event_id")).alias("lat"),
-                  derived_lon(F.col("event_id")).alias("lon")))
-    pairs = range_join_within(cust.select("c_custkey", "lat", "lon"),
-                              ev.select("event_id", "lat", "lon"),
-                              _RANGE_JOIN_KM, dist_col="dist_km")
+    cust = _points(_read_spread(spark, sf_dir, "customer"), "c_custkey",
+                   900000)
+    ev = _points(_read_spread(spark, sf_dir, "events"), "event_id")
+    pairs = range_join_within(cust, ev, _RANGE_JOIN_KM, dist_col="dist_km")
     w = Window.partitionBy("c_custkey").orderBy(
         F.col("dist_km").asc(), F.col("event_id").asc())
     return (pairs.withColumn("rnk", F.row_number().over(w))
@@ -1175,20 +1200,10 @@ def range_join_customers_events(spark, sf_dir):
     blocking dropped no pair."""
     from .operators.range_join import range_join_within
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
-        F.col("c_custkey"),
-        derived_lat(F.col("c_custkey") + 900000).alias("lat"),
-        derived_lon(F.col("c_custkey") + 900000).alias("lon"))
-    # single-row-group events scan: spread the probe side (see
-    # range_knn_customers_events)
-    ev = (_read(spark, sf_dir, "events").select("event_id").repartition(par)
-          .select("event_id",
-                  derived_lat(F.col("event_id")).alias("lat"),
-                  derived_lon(F.col("event_id")).alias("lon")))
-    out = range_join_within(cust.select("c_custkey", "lat", "lon"),
-                            ev.select("event_id", "lat", "lon"),
-                            _RANGE_JOIN_KM)
+    cust = _points(_read_spread(spark, sf_dir, "customer"), "c_custkey",
+                   900000)
+    ev = _points(_read_spread(spark, sf_dir, "events"), "event_id")
+    out = range_join_within(cust, ev, _RANGE_JOIN_KM)
     return out.select("c_custkey", "event_id")
 
 
@@ -1375,17 +1390,10 @@ SELECT DISTINCT rel_id, tile_id FROM (
 def knn_customers_suppliers(spark, sf_dir):
     """grid-accelerated exact 3-NN: customer points → supplier points
     (generalizes DefaultCityFinder.java:39-105 sort-refine)."""
-    # derived coords are heavy scalar chains over single-file inputs —
-    # repartition the raw reads so the derivation runs across cores
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
-        F.col("c_custkey").alias("q_id"),
-        derived_lat(F.col("c_custkey") + 900000).alias("q_lat"),
-        derived_lon(F.col("c_custkey") + 900000).alias("q_lon"))
-    supp = _read(spark, sf_dir, "supplier").repartition(par).select(
-        F.col("s_suppkey").alias("n_id"),
-        derived_lat(F.col("s_suppkey") + 300000).alias("n_lat"),
-        derived_lon(F.col("s_suppkey") + 300000).alias("n_lon"))
+    cust = _points(_read_spread(spark, sf_dir, "customer"), "c_custkey",
+                   900000).toDF("q_id", "q_lat", "q_lon")
+    supp = _points(_read_spread(spark, sf_dir, "supplier"), "s_suppkey",
+                   300000).toDF("n_id", "n_lat", "n_lon")
     out = knn_grid(cust, supp, k=3)   # cell auto-tuned from supplier density
     return out.select(F.col("q_id").alias("c_custkey"),
                       F.col("n_id").alias("s_suppkey"), "rnk")
@@ -1422,21 +1430,16 @@ def knn_stratified_customers_events(spark, sf_dir):
     stratified path."""
     from .operators.knn import knn_grid_stratified
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
-        F.col("c_custkey").alias("q_id"),
-        derived_lat(F.col("c_custkey") + 900000).alias("q_lat"),
-        derived_lon(F.col("c_custkey") + 900000).alias("q_lon"))
+    cust = _points(_read_spread(spark, sf_dir, "customer"), "c_custkey",
+                   900000).toDF("q_id", "q_lat", "q_lon")
     # derive the event coords ONCE: each stratum branch (and each
     # escalation level inside it) re-scans the neighbor table, and the
     # derived-coordinate scalar chain is the dominant per-scan cost at
     # bench scale. At production scale these are stored columns — the
     # checkpoint stands in for that storage, not for the neighbor table
     # itself (the operator still never collects or explodes it).
-    ev = _read(spark, sf_dir, "events").repartition(par).select(
-        F.col("event_id").alias("n_id"),
-        derived_lat(F.col("event_id")).alias("n_lat"),
-        derived_lon(F.col("event_id")).alias("n_lon")).localCheckpoint()
+    ev = _points(_read_spread(spark, sf_dir, "events"), "event_id").toDF(
+        "n_id", "n_lat", "n_lon").localCheckpoint()
     out = knn_grid_stratified(cust, ev, k=3)
     return out.select(F.col("q_id").alias("c_custkey"),
                       F.col("n_id").alias("event_id"), "rnk")
@@ -1475,15 +1478,10 @@ def knn_hex_customers_events(spark, sf_dir):
     plain cross-join window — the same contract as the grid twins."""
     from .operators.knn_hex import knn_hex_kring
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
-        F.col("c_custkey").alias("q_id"),
-        derived_lat(F.col("c_custkey") + 900000).alias("q_lat"),
-        derived_lon(F.col("c_custkey") + 900000).alias("q_lon"))
-    ev = _read(spark, sf_dir, "events").repartition(par).select(
-        F.col("event_id").alias("n_id"),
-        derived_lat(F.col("event_id")).alias("n_lat"),
-        derived_lon(F.col("event_id")).alias("n_lon")).localCheckpoint()
+    cust = _points(_read_spread(spark, sf_dir, "customer"), "c_custkey",
+                   900000).toDF("q_id", "q_lat", "q_lon")
+    ev = _points(_read_spread(spark, sf_dir, "events"), "event_id").toDF(
+        "n_id", "n_lat", "n_lon").localCheckpoint()
     out = knn_hex_kring(cust, ev, k=3, res=3)
     return out.select(F.col("q_id").alias("c_custkey"),
                       F.col("n_id").alias("event_id"), "rnk")
@@ -1757,12 +1755,7 @@ HAVING count(*) % 2 = 1
 # ---------------------------------------------------------------------------
 
 def doc_text_features(spark, sf_dir):
-    # documents ships as one row group (unsplittable scan) while the text
-    # functions are compute-bound — spread across cores, but shuffle ONLY
-    # the projected columns, not the full row (VERDICT r2 item 4)
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text", "n_chars") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         T.token_count(F.col("text")).alias("n_tokens"),
@@ -1799,9 +1792,7 @@ def doc_quality_signals(spark, sf_dir):
     """quality-filter signal columns (brief: length/punct/stopword
     ratios): punctuation count and stopword hits per thousand tokens —
     integer-exact so the DuckDB twin hashes identically."""
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.length("text").alias("n_chars_text"),
@@ -1892,10 +1883,7 @@ def incremental_dedup_new_docs(spark, sf_dir):
     a bucket join, not a full-corpus rebuild. Returns each new doc with
     its nearest seen near-dup (min seen id) — NULL-free: only flagged
     docs emit."""
-    # single-row-group scan: the |new|-side signature computation is the
-    # incremental cost and otherwise runs one-task (value-neutral)
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents")
     seen = docs.filter(F.col("doc_id") < 300)
     new = docs.filter(F.col("doc_id") >= 300)
     sig_seen = D.minhash_signatures(seen, "doc_id", "text", 1, 16)
@@ -1947,13 +1935,9 @@ def decontaminate_docs(spark, sf_dir):
     rows reach the final groupBy."""
     from .functions.decontam import contamination_hits
 
-    docs = _read(spark, sf_dir, "documents")
-    evalset = docs.filter(F.col("doc_id") < 50)
-    # the shingle build is the CPU hot loop; spread the single-file scan
-    # before it (one narrow-to-wide exchange of raw text, the same
-    # discipline as doc_fingerprints)
-    corpus = docs.filter(F.col("doc_id") >= 50).repartition(
-        spark.sparkContext.defaultParallelism)
+    evalset = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    corpus = _read_spread(spark, sf_dir, "documents").filter(
+        F.col("doc_id") >= 50)
     return contamination_hits(corpus, evalset, "doc_id", "text", n=5)
 
 
@@ -2057,8 +2041,7 @@ def events_table_checksums(spark, sf_dir):
     covers the canonicalization needed to include them)."""
     from .functions.checksum import table_checksum
 
-    ev = _read(spark, sf_dir, "events").repartition(
-        spark.sparkContext.defaultParallelism)
+    ev = _read_spread(spark, sf_dir, "events")
     return table_checksum(ev, ["event_id", "user_id", "event_type"],
                           buckets=8)
 
@@ -2107,8 +2090,7 @@ def doc_similar_top3(spark, sf_dir):
     quadratic posting buckets)."""
     from .functions.retrieval import similar_topk
 
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents")
     qids = docs.filter(F.col("doc_id") < 20).select("doc_id")
     out = similar_topk(docs, qids, k=3, max_df=400)
     # dtype parity with the (frozen) oracle: DuckDB SUM(BIGINT) → HUGEINT
@@ -2186,10 +2168,7 @@ def kmeans_embed_clusters(spark, sf_dir):
     could never pass this gate (sum-order/tie noise)."""
     from .functions.kmeans import kmeans_fit
 
-    # single-row-group scan: every Lloyd pass re-reads the table; spread
-    # the quantize+assign work across cores
-    emb = _read(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism)
+    emb = _read_spread(spark, sf_dir, "embeddings")
     _, assigned = kmeans_fit(emb, "vec_id", "embedding", k=4, iters=2,
                              dim=64)
     return assigned
@@ -2201,9 +2180,7 @@ def _kmeans_sql() -> str:
 
 
 def doc_fingerprints(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents")
     return docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
 
 
@@ -2213,12 +2190,7 @@ SELECT doc_id, {T.fingerprint_sql('text')} AS fp FROM documents
 
 
 def doc_simhash(spark, sf_dir):
-    # documents is one small file (one scan task) but simhash is a
-    # compute-bound per-word fold — spread the projected columns across
-    # cores first (never shuffle unprojected payload, VERDICT r2 item 4)
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents")
     return docs.select("doc_id", D.simhash16(F.col("text")).alias("simhash"))
 
 
@@ -2246,10 +2218,7 @@ WHERE rn = 1
 
 def jaccard_pairs_docs(spark, sf_dir):
     """exact unigram-Jaccard near-dup pairs on a doc subset (≥0.6)."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _doc_subset(spark, sf_dir)
     out = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=1, threshold=0.6)
     return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b")
 
@@ -2462,15 +2431,7 @@ SELECT event_id, event_type, value_cents FROM gated WHERE action <> 'delete'
 def tiling_pipeline_counts(spark, sf_dir):
     """full reference pipeline: density → driver quadtree → assignment →
     per-tile counts (tile boundaries included for regression eyeballs)."""
-    # single-row-group events scan: the density partial-agg and the
-    # broadcast assignment probe otherwise run one-task (the exchange is
-    # ids only, BEFORE the coordinate derivation; the tile join itself
-    # still never shuffles the fact — plan-guarded)
-    pts = (_read(spark, sf_dir, "events").select("event_id")
-           .repartition(spark.sparkContext.defaultParallelism)
-           .select("event_id",
-                   derived_lat(F.col("event_id")).alias("lat"),
-                   derived_lon(F.col("event_id")).alias("lon")))
+    pts = _points(_read_spread(spark, sf_dir, "events"), "event_id")
     res = run_tiling_pipeline(pts, max_nodes=200, overlap=_OVERLAP)
     if res is None:
         return spark.createDataFrame([], "tile_id int, n_rows long")
@@ -2480,15 +2441,9 @@ def tiling_pipeline_counts(spark, sf_dir):
 def image_decode_stats(spark, sf_dir):
     """multimodal path: synthesize deterministic images for each document id
     and run the distributed decode/stat kernel (mapInPandas, Arrow batches)."""
-    from .pipeline.synth import _gen_map
     from .operators.raster import decode_stats
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+
+    images = _doc_images(spark, sf_dir)
     return decode_stats(images).select("image_id", "p_min", "p_max")
 
 
@@ -2497,16 +2452,9 @@ def image_histogram_features(spark, sf_dir):
     (operators/raster.histogram_features) — ALL THREE formats including
     the lossy q6, whose midpoint reconstruction the oracle reproduces
     exactly (the decode is closed-form, unlike a DCT codec)."""
-    from .pipeline.synth import _gen_map
     from .operators.raster import histogram_features
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+    images = _doc_images(spark, sf_dir)
     out = histogram_features(images, bins=16)
     return out.select(
         F.regexp_replace("image_id", "^img", "").cast("long").alias("image_id"),
@@ -2542,16 +2490,9 @@ def image_pyramid_stats(spark, sf_dir):
     rebuilds every level from the closed-form pixel generator —
     including the lossy q6 decode — so value equality pins the exact
     box-filter arithmetic at each level."""
-    from .pipeline.synth import _gen_map
     from .operators.raster import pyramid_stats
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+    images = _doc_images(spark, sf_dir)
     out = pyramid_stats(images, levels=2)
     return out.select(
         F.regexp_replace("image_id", "^img", "").cast("long").alias("image_id"),
@@ -2593,16 +2534,9 @@ def phash_near_pairs_images(spark, sf_dir):
     lossless formats only, so the oracle's closed-form generator twin
     holds bit-for-bit), then runs the pigeonhole-complete band join
     (4×16-bit bands ⊇ hamming ≤ 3) with a JVM popcount refine."""
-    from .pipeline.synth import _gen_map
     from .functions.phash import phash_from_bytes, phash_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+    images = _doc_images(spark, sf_dir)
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
     # numeric ids BEFORE the pair expansion: the output is ~25M pairs at
     # sf1.0, and converting ids per OUTPUT row charged two regexes to
@@ -2626,16 +2560,9 @@ def phash128_near_pairs_images(spark, sf_dir):
     path's 2^16). Same contract as phash_near_pairs_images: fingerprints
     recomputed from bytes through the real decode path, lossless formats
     only so the generator closed form holds."""
-    from .pipeline.synth import _gen_map
     from .functions.phash import phash128_from_bytes, phash128_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+    images = _doc_images(spark, sf_dir)
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
     # numeric ids before expansion + one decode pass (see
     # phash_near_pairs_images)
@@ -2654,16 +2581,9 @@ def phash_dct_near_pairs_images(spark, sf_dir):
     mean-threshold path. Fingerprints recomputed from bytes through the
     real decode path (lossless formats, so the oracle's closed-form
     generator twin — same Q13 constants inlined — holds bit-for-bit)."""
-    from .pipeline.synth import _gen_map
     from .functions.phash import phash_dct_from_bytes, phash_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+    images = _doc_images(spark, sf_dir)
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
     # numeric ids before expansion + one decode pass (see
     # phash_near_pairs_images)
@@ -2688,11 +2608,8 @@ def phash_dedup_clusters(spark, sf_dir):
     from .pipeline.synth import _phash_map
     from .functions.phash import phash_value_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id"))
     hashes = docs.mapInPandas(
         _phash_map,
         schema="image_id long, phash long").localCheckpoint(eager=True)
@@ -2736,10 +2653,7 @@ def crossmodal_dedup_clusters(spark, sf_dir):
     from .pipeline.synth import _phash_map
     from .functions.phash import phash_near_pairs
 
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _doc_subset(spark, sf_dir)
     text_pairs = D.minhash_lsh_pairs(
         docs, "doc_id", "text", n=1, num_hashes=16, bands=8).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
@@ -2784,10 +2698,7 @@ SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
 
 def minhash_candidates(spark, sf_dir):
     """MinHash-LSH near-dup candidates (scale path for jaccard_pairs_docs)."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _doc_subset(spark, sf_dir)
     out = D.minhash_lsh_pairs(docs, "doc_id", "text", n=1, num_hashes=16, bands=8)
     return out.select("doc_a", "doc_b")
 
@@ -2856,10 +2767,7 @@ def near_dup_edit_refine(spark, sf_dir):
     Levenshtein (threshold DP, JVM-side) certifies character-level
     closeness and drops shingle-collision false positives
     (functions/dedup.edit_refine)."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _doc_subset(spark, sf_dir)
     cand = D.minhash_lsh_pairs(docs, "doc_id", "text", n=1,
                                num_hashes=16, bands=8)
     return D.edit_refine(cand, docs, max_dist=80, prefix=120)
@@ -2878,10 +2786,7 @@ def dedup_clusters_docs(spark, sf_dir):
     canonical-survivor rule. Iterative min-label propagation
     (functions/dedup.dedup_clusters); singleton docs are their own
     cluster."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _doc_subset(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", n=1,
                                 num_hashes=16, bands=8)
     out = D.dedup_clusters(docs.select("doc_id"), pairs)
@@ -3061,10 +2966,7 @@ def ann_pq_top3(spark, sf_dir):
     per-query shortlist. The memory-bound scale path — compare with
     embed_top3 (exact) / ann_lsh_top3 / ann_ivf_top3; at 10^12 rows PQ
     composes with IVF into the published IVFADC layout."""
-    # single-row-group scan: the ADC code scan and the exact re-rank
-    # otherwise run one-task
-    emb = _read(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism)
+    emb = _read_spread(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     corpus = emb.select(F.col("vec_id").alias("c_id"),
@@ -3239,16 +3141,9 @@ def dhash_near_pairs_images(spark, sf_dir):
     stored bytes through the real decode path on the lossless subset,
     then the same pigeonhole-complete 4×16-bit band join + popcount
     refine."""
-    from .pipeline.synth import _gen_map
     from .functions.phash import dhash_from_bytes, phash_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
-    images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
-                              "w int, h int, fmt string, caption string, phash long")
+    images = _doc_images(spark, sf_dir)
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
     dh = dhash_from_bytes(lossless)
     pairs = phash_near_pairs(dh, id_col="image_id",

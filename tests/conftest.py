@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -19,3 +20,17 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@contextlib.contextmanager
+def job_group(sc, name):
+    """Tag the block's Spark jobs with job group `name`, then clear the
+    group, its description and its interrupt flag, so that jobs of later
+    tests on this thread carry no group they do not own."""
+    sc.setJobGroup(name, "test", False)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)

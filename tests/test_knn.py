@@ -3,6 +3,7 @@ including the exact-boundary-tie case (ADVICE round 1, item 4)."""
 
 import numpy as np
 import pandas as pd
+from conftest import job_group
 
 from osm2garmin_spark.operators.knn import knn_broadcast, knn_grid
 
@@ -220,13 +221,9 @@ def test_stratified_branches_inherit_job_group(spark):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup("knn-stratified-group", "job-group test", False)
-    try:
+    with job_group(sc, "knn-stratified-group"):
         n = knn_grid_stratified(qd, nd, 3).count()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
     assert n == 3 * len(q)
     assert tracker.getJobIdsForGroup("knn-stratified-group")
     assert set(tracker.getJobIdsForGroup(None)) <= before

@@ -6,6 +6,7 @@ import io
 import contextlib
 
 import pytest
+from conftest import job_group
 from pyspark.sql import functions as F
 
 from osm2garmin_spark.expressions import derived_lat, derived_lon
@@ -136,13 +137,12 @@ def test_ann_autosizing_runs_no_count_scan(spark):
 
     sc = spark.sparkContext
     st = sc.statusTracker()
-    sc.setJobGroup("ann-lsh-build", "plan-test", False)
-    df = S.ann_lsh_topk(qs, corpus, k=3, dim=16, n_rows=400)
+    with job_group(sc, "ann-lsh-build"):
+        df = S.ann_lsh_topk(qs, corpus, k=3, dim=16, n_rows=400)
     lsh_jobs = st.getJobIdsForGroup("ann-lsh-build")
-    sc.setJobGroup("ann-ivf-build", "plan-test", False)
-    df2 = S.ivf_topk(qs, corpus, k=3, dim=16, n_rows=400)
+    with job_group(sc, "ann-ivf-build"):
+        df2 = S.ivf_topk(qs, corpus, k=3, dim=16, n_rows=400)
     ivf_jobs = st.getJobIdsForGroup("ann-ivf-build")
-    sc.setJobGroup("ann-run", "plan-test", False)
 
     assert len(lsh_jobs) == 0, f"LSH build launched jobs: {lsh_jobs}"
     # the IVF fallback build is allowed its early-terminating
@@ -160,7 +160,9 @@ def test_ann_autosizing_runs_no_count_scan(spark):
     assert not any("takeOrdered" in n or "sortBy" in n
                    for n in stage_names), stage_names
     # the DataFrames still execute correctly
-    assert df.count() > 0 and df2.count() > 0
+    with job_group(sc, "ann-run"):
+        assert df.count() > 0 and df2.count() > 0
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
 
 
 def test_ivf_footer_sample_build_runs_zero_jobs(spark):
@@ -190,20 +192,54 @@ def test_ivf_footer_sample_build_runs_zero_jobs(spark):
 
     sc = spark.sparkContext
     st = sc.statusTracker()
-    sc.setJobGroup("ivf-footer-build", "plan-test", False)
-    df = ann_ivf_top3(spark, "/root/testdata/sf0.001")
-    jobs = st.getJobIdsForGroup("ivf-footer-build")
-    sc.setJobGroup("ivf-footer-run", "plan-test", False)
+    with job_group(sc, "ivf-footer-build"):
+        df = ann_ivf_top3(spark, "/root/testdata/sf0.001")
     # the only permissible jobs are spark.read.parquet's own 1-task
     # footer/schema reads — no sample scan, no TakeOrdered, no count
-    for jid in jobs:
+    _assert_footer_jobs_only(st, "ivf-footer-build")
+    with job_group(sc, "ivf-footer-run"):
+        assert df.count() > 0
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+def _assert_footer_jobs_only(st, group):
+    """Every job in `group` is one of spark.read.parquet's own 1-task
+    footer/schema reads."""
+    for jid in st.getJobIdsForGroup(group):
         ji = st.getJobInfo(jid)
         for sid in (ji.stageIds if ji else []):
             si = st.getStageInfo(sid)
             assert si is None or (si.name.startswith("parquet at")
                                   and si.numTasks == 1), \
-                f"IVF footer-sample build launched a data job: {si.name}"
-    assert df.count() > 0
+                f"{group} launched a data job: {si.name}"
+
+
+def test_read_spread_widens_one_row_group_scan(spark):
+    """A one-row-group table scans as one task, so _read_spread adds
+    exactly one round-robin exchange to defaultParallelism; column
+    pruning and the doc-subset filter still reach the scan below it, so
+    the 300 filtered rows (not the whole table) are spread over every
+    core, and building the DataFrame reads footers only."""
+    import re
+    from osm2garmin_spark.queries import _doc_subset
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    with job_group(sc, "read-spread-build"):
+        df = _doc_subset(spark, SF).select("doc_id", "text")
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    _assert_footer_jobs_only(sc.statusTracker(), "read-spread-build")
+    plan = _plan(df)
+    assert len(set(re.findall(r"\((\d+)\) Exchange", plan))) == 1
+    assert plan.count(f"RoundRobinPartitioning({par})") == 1
+    tree = plan.split("\n\n")[0]
+    assert tree.index("Exchange") < tree.index("Filter") < tree.index("Scan")
+    read = next(l for l in plan.splitlines() if "ReadSchema" in l)
+    assert read.split("ReadSchema: ")[1] == "struct<doc_id:bigint,text:string>"
+    pushed = next(l for l in plan.splitlines() if "PushedFilters" in l)
+    assert "LessThan(doc_id,300)" in pushed
+    sizes = df.rdd.glom().map(len).collect()
+    assert len(sizes) == par and sum(sizes) == 300 and min(sizes) > 0
 
 
 def test_knn_grid_explodes_query_side(spark, monkeypatch):
