@@ -427,8 +427,10 @@ def knn_grid(queries: DataFrame, neighbors: DataFrame, k: int,
     neighbor table) and each group runs this operator with a cell tuned
     to its own density.
     """
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
+    # one parsed literal: a lit() per field cost a py4j round trip each
+    offs = F.expr("array({})".format(", ".join(
+        f"named_struct('dx', {dx}, 'dy', {dy})"
+        for dx in (-1, 0, 1) for dy in (-1, 0, 1))))
 
     def ring(cell0: float, level: int, escal: DataFrame) -> Ring:
         cell_j = max(float(cell0), MIN_CELL_DEG) * (2.0 ** level)

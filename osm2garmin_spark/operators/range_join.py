@@ -162,6 +162,26 @@ def _s2_level_for_radius(radius_km: float) -> int:
     return min(30, int(math.floor(math.log2(S2_MIN_WIDTH_DERIV / r_rad))))
 
 
+#: per-row trig columns projected onto both sides before the join
+_HELPERS = ["_lath", "_lonh", "_clat"]
+
+
+def _trig() -> dict:
+    """The _HELPERS of a row at degree columns lat/lon: half-angle
+    radians and cos lat, so the per-pair residual is two sines."""
+    lat, lon = F.col("lat"), F.col("lon")
+    return {"_lath": lat * F.lit(HALF_RAD), "_lonh": lon * F.lit(HALF_RAD),
+            "_clat": F.cos(lat * F.lit(DEG2RAD))}
+
+
+def _b_renamed(b_cols: list, dup: set, keys: tuple = ()) -> list:
+    """The right side's columns in place, with its columns that clash with
+    the left side's and its _HELPERS renamed b_<name> (``keys`` pass
+    through between the two), as one projection."""
+    return ([F.col(c).alias(f"b_{c}") if c in dup else c for c in b_cols]
+            + list(keys) + [F.col(c).alias(f"b_{c}") for c in _HELPERS])
+
+
 def range_join_within(a: DataFrame, b: DataFrame, radius_km: float,
                       max_abs_lat: float = 85.1,
                       dist_col: str | None = None,
@@ -242,8 +262,10 @@ def range_join_within(a: DataFrame, b: DataFrame, radius_km: float,
         w = math.degrees(2.0 * math.asin(s_half / mincos3))
         return max(1, int(math.floor(360.0 / w)))
 
-    n_x_arr = [_n_x_for_row(r) for r in range(n_rows)]
-    n_x_lit = F.array(*[F.lit(v) for v in n_x_arr])
+    # one parsed array literal: a lit() per row cost a py4j round trip
+    # each, and constant folding makes both the same plan literal
+    n_x = ", ".join(str(_n_x_for_row(r)) for r in range(n_rows))
+    n_x_lit = F.expr(f"array({n_x})")
     row_clamped = F.greatest(F.least(F.col("_iy"), F.lit(n_rows - 1)),
                              F.lit(0))
     n_x_of_row = F.element_at(n_x_lit, (row_clamped + 1).cast("int"))
@@ -257,49 +279,40 @@ def range_join_within(a: DataFrame, b: DataFrame, radius_km: float,
                 f"{side}.lat exceeds max_abs_lat={max_abs_lat}; raise the "
                 f"cap or block on geo/s2.py cells"))).otherwise(F.lit(0))
         iy = F.floor((lat + F.lit(90.0)) / F.lit(cell_lat))
-        return (df
-                .withColumn("_g", guard)
-                .withColumn("_iy", F.when(finite, (iy + F.col("_g"))
-                                          .cast("long")))
-                # per-ROW trig, projected once before the join
-                .withColumn("_lath", lat * F.lit(HALF_RAD))
-                .withColumn("_lonh", lon * F.lit(HALF_RAD))
-                .withColumn("_clat", F.cos(lat * F.lit(DEG2RAD)))
-                .drop("_g"))
+        return df.withColumns({
+            "_iy": F.when(finite, (iy + guard).cast("long")), **_trig()})
 
-    def with_ix(df: DataFrame) -> DataFrame:
+    def ix() -> Column:
         # base cell in the row's own ring, wrapped: lon = +180.0 (or any
         # lon outside [-180, 180)) would otherwise index past the ring
         nx = n_x_of_row.cast("double")
-        ix = F.floor((F.col("lon") + F.lit(180.0)) * nx / F.lit(360.0))
-        return df.withColumn("_ix", F.when(~F.isnan(F.col("lon")),
-                                           F.pmod(ix, n_x_of_row)))
+        cell = F.floor((F.col("lon") + F.lit(180.0)) * nx / F.lit(360.0))
+        return F.when(~F.isnan(F.col("lon")), F.pmod(cell, n_x_of_row))
 
-    ak = keyed(a, "a")
-    bk = with_ix(keyed(b, "b"))
+    a_cols = list(a.columns)
+    b_cols = list(b.columns)
+    dup = set(a_cols) & set(b_cols)
+    b_out = [f"b_{c}" if c in dup else c for c in b_cols]
+
+    # right side: keyed once, its cell and the b_ renames in one projection
+    bren = keyed(b, "b").select(*_b_renamed(b_cols, dup, ("_iy",)),
+                                ix().alias("_ix"))
 
     # left side: rows iy-1 .. iy+1, and per target row the <=3 ring cells
     # of THAT row's lattice around the point's lon (array_distinct folds
-    # the duplicates a 1- or 2-cell ring produces near the poles)
-    ak = ak.select("*", F.explode(
-        F.array(*[F.lit(d) for d in (-1, 0, 1)])).alias("_dy"))
-    ak = ak.withColumn("_iy", F.col("_iy") + F.col("_dy")).drop("_dy")
-    ak = with_ix(ak)
-    nx_l = n_x_of_row
-    ak = (ak.select("*", F.explode(F.array_distinct(F.array(
-                F.pmod(F.col("_ix") - 1, nx_l),
-                F.col("_ix"),
-                F.pmod(F.col("_ix") + 1, nx_l)))).alias("_ixr"))
-            .drop("_ix").withColumnRenamed("_ixr", "_ix"))
-
-    a_cols = [c for c in a.columns]
-    b_cols = [c for c in b.columns]
-    helpers = ["_lath", "_lonh", "_clat"]
-    dup = set(a_cols) & set(b_cols)
-    bren = bk
-    for c in list(dup) + helpers:
-        bren = bren.withColumnRenamed(c, f"b_{c}")
-    b_out = [f"b_{c}" if c in dup else c for c in b_cols]
+    # the duplicates a 1- or 2-cell ring produces near the poles). _ix is
+    # its own projection below the ring explode, so the row's ring width
+    # is looked up once per row, not once per array element.
+    ak = keyed(a, "a").select(
+        "*", F.explode(F.expr("array(-1, 0, 1)")).alias("_dy"))
+    ak = ak.select(*a_cols, (F.col("_iy") + F.col("_dy")).alias("_iy"),
+                   *_HELPERS)
+    ak = ak.select("*", ix().alias("_ix"))
+    ak = ak.select("*", F.explode(F.array_distinct(F.array(
+        F.pmod(F.col("_ix") - 1, n_x_of_row),
+        F.col("_ix"),
+        F.pmod(F.col("_ix") + 1, n_x_of_row)))).alias("_ixr"))
+    ak = ak.select(*a_cols, "_iy", *_HELPERS, F.col("_ixr").alias("_ix"))
 
     blat = F.col("b_lat") if "lat" in dup else F.col("lat")
     blon = F.col("b_lon") if "lon" in dup else F.col("lon")
@@ -340,24 +353,14 @@ def _range_join_s2(a: DataFrame, b: DataFrame, radius_km: float,
     cell_lat = math.degrees(radius_km / R_EARTH)
     hav_t = hav_threshold(radius_km)
 
-    def project(df: DataFrame) -> DataFrame:
-        lat, lon = F.col("lat"), F.col("lon")
-        return (df.withColumn("_lath", lat * F.lit(HALF_RAD))
-                  .withColumn("_lonh", lon * F.lit(HALF_RAD))
-                  .withColumn("_clat", F.cos(lat * F.lit(DEG2RAD))))
-
-    ak = project(a).withColumn(
-        "_cell", F.explode(s2_ring_udf(level)(F.col("lat"), F.col("lon"))))
-    bk = project(b).withColumn(
-        "_cell", s2_cell_udf(level)(F.col("lat"), F.col("lon")))
-
+    latlon = F.col("lat"), F.col("lon")
+    ak = a.withColumns(_trig()).select(
+        "*", F.explode(s2_ring_udf(level)(*latlon)).alias("_cell"))
     a_cols = list(a.columns)
     b_cols = list(b.columns)
-    helpers = ["_lath", "_lonh", "_clat"]
     dup = set(a_cols) & set(b_cols)
-    bren = bk
-    for c in list(dup) + helpers:
-        bren = bren.withColumnRenamed(c, f"b_{c}")
+    bren = b.withColumns(_trig()).select(
+        *_b_renamed(b_cols, dup), s2_cell_udf(level)(*latlon).alias("_cell"))
     b_out = [f"b_{c}" if c in dup else c for c in b_cols]
     blat = F.col("b_lat") if "lat" in dup else F.col("lat")
 

@@ -34,7 +34,8 @@ with the identical {seq, manifests} state, so previously committed
 history stays visible and a resumed run skips completed tiles. Without a
 WAL the server is in-memory and a restart orphans all committed blobs —
 the backend warns once per table when it observes seq==0 while the blob
-store is non-empty.
+store holds a blob written before the server started (every state
+response carries the server's start time).
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import time
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -62,6 +64,7 @@ class CatalogServer:
     def __init__(self, host: str = "127.0.0.1", port: int = 0,
                  wal_path: Optional[str] = None):
         state = {"tables": {}}      # table -> {"seq": int, "manifests": [...]}
+        started = time.time()
         lock = threading.Lock()
         stopping = {"v": False}
         self.wal_path = wal_path
@@ -108,7 +111,8 @@ class CatalogServer:
                 # the commit CAS hostage
                 with lock:
                     t = state["tables"].get(table, {"seq": 0, "manifests": []})
-                    snap = {"seq": t["seq"], "manifests": list(t["manifests"])}
+                    snap = {"seq": t["seq"], "manifests": list(t["manifests"]),
+                            "started": started}
                 self._send(200, snap)
 
             def do_POST(self):
@@ -228,12 +232,18 @@ class CatalogClient:
         instead of blocking a mid-pipeline commit forever (ADVICE r4)."""
         self.base_url = base_url.rstrip("/")
         self.timeout = timeout
+        self.server_started: Optional[float] = None
 
     def state(self, table: str) -> dict:
+        """{'seq': n, 'manifests': [...]} of ``table``. The response also
+        carries the server's start time (epoch seconds), kept in
+        ``server_started``: it tells blobs older than the server apart."""
         quoted = urllib.parse.quote(table, safe="")
         with urllib.request.urlopen(f"{self.base_url}/state/{quoted}",
                                     timeout=self.timeout) as r:
-            return json.loads(r.read())
+            st = json.loads(r.read())
+        self.server_started = st.pop("started")
+        return st
 
     def commit(self, table: str, expected_seq: int, manifest: str,
                replaces: Optional[list] = None) -> tuple:
@@ -275,21 +285,37 @@ def _table_key(root: str) -> str:
 _STATE_LOSS_WARNED: Set[str] = set()
 
 
-def _warn_if_state_lost(table: str, seq: int, mdir: str) -> None:
+def _older_blob(mdir: str, started: float) -> bool:
+    """Whether ``mdir`` holds a manifest blob last written before
+    ``started`` (a blob a racer deletes meanwhile does not count)."""
+    try:
+        names = [n for n in os.listdir(mdir) if n.endswith(".parquet")]
+    except FileNotFoundError:
+        return False
+    for n in names:
+        try:
+            if os.stat(os.path.join(mdir, n)).st_mtime < started:
+                return True
+        except FileNotFoundError:
+            pass
+    return False
+
+
+def _warn_if_state_lost(table: str, seq: int, mdir: str,
+                        started: float) -> None:
     """An in-memory (WAL-less) catalog that restarted reports seq==0
     while committed manifest blobs persist on disk — reads stay
     consistent, but all history silently became invisible and a resumed
     run reprocesses every tile. Warn once per table when that signature
-    appears. (A crashed FIRST commit also leaves seq==0 + an orphan blob;
-    the message names both readings — the warning is a signal, not an
-    error.)"""
+    appears: a blob older than the server (``started``, its start time).
+    A blob written since is a concurrent first commit between its blob
+    write and its CAS, not lost state. (A FIRST commit that crashed
+    before an earlier server's start also leaves seq==0 + an orphan
+    blob; the message names both readings — the warning is a signal,
+    not an error.)"""
     if table in _STATE_LOSS_WARNED or seq != 0:
         return
-    try:
-        has_blobs = any(n.endswith(".parquet") for n in os.listdir(mdir))
-    except FileNotFoundError:
-        return
-    if has_blobs:
+    if _older_blob(mdir, started):
         _STATE_LOSS_WARNED.add(table)
         import warnings
 
@@ -316,7 +342,8 @@ class CatalogBackend:
     def state(self) -> tuple:
         """(seq, referenced blob paths)."""
         st = self.client.state(self.table)
-        _warn_if_state_lost(self.table, st["seq"], self.dir)
+        _warn_if_state_lost(self.table, st["seq"], self.dir,
+                            self.client.server_started)
         return st["seq"], [os.path.join(self.dir, n)
                            for n in st["manifests"]]
 

@@ -385,6 +385,48 @@ def test_catalog_state_loss_warns(spark, tmp_path):
         srv2.stop()
 
 
+def test_catalog_first_commit_in_flight_does_not_warn(spark, tmp_path,
+                                                      catalog):
+    """A first commit paused between its blob write and its CAS leaves
+    seq==0 next to a non-empty blob store. Another store reading the
+    state then must not take the blob for lost history: it is younger
+    than the server, so no warning fires."""
+    import warnings as _warnings
+
+    d = str(tmp_path / "inflight")
+    first = LineageStore(d, catalog=catalog)
+    claim = first.backend.claim
+    written, go = threading.Event(), threading.Event()
+
+    def paused_claim(seq, blob, covered):
+        written.set()
+        go.wait(60)
+        return claim(seq, blob, covered)
+
+    first.backend.claim = paused_claim
+    got = {}
+
+    def commit():
+        got["tiles"] = first.commit(spark, "assign", "a",
+                                    _stats_df(spark, [1, 2]))
+
+    t = threading.Thread(target=commit)
+    t.start()
+    try:
+        assert written.wait(60)
+        assert os.listdir(os.path.join(d, "_lineage_catalog"))
+        with _warnings.catch_warnings(record=True) as w:
+            _warnings.simplefilter("always")
+            seq, paths = LineageStore(d, catalog=catalog).state()
+        assert (seq, paths) == (0, [])
+        assert not [x for x in w if "seq=0" in str(x.message)], \
+            [str(x.message) for x in w]
+    finally:
+        go.set()
+        t.join(60)
+    assert got["tiles"] == {1, 2}
+
+
 def test_catalog_client_timeout(tmp_path):
     """A wedged server surfaces as a timeout error, not a hang."""
     import socket

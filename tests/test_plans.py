@@ -464,3 +464,55 @@ def test_range_join_right_side_keys_once_no_explode(spark):
     import re
     gen_ids = set(re.findall(r"\((\d+)\) Generate", plan))
     assert len(gen_ids) == 2, plan
+
+
+def _py4j_commands(build) -> int:
+    """py4j commands the calling thread sends while ``build()`` runs.
+    Cyclic GC is held off during the build, and object releases that
+    other threads send are not counted, so the figure is the builder's
+    own and repeats exactly."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send, me, n = ClientServerConnection.send_command, threading.get_ident(), [0]
+
+    def counting(self, command, *args, **kwargs):
+        n[0] += threading.get_ident() == me
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+    return n[0]
+
+
+def test_range_join_plan_builds_in_few_py4j_commands(spark):
+    """Plan building is driver time between Spark jobs. With PySpark's
+    DataFrame-debugging call-site capture on, every Column operator costs
+    ~10 py4j round trips (stack walk + JVM origin set/clear) and building
+    this join took ~2,100; with it off, the ring-width table as one
+    parsed literal and one projection per keyed/renamed step, it takes
+    592 (bound: +10%)."""
+    from osm2garmin_spark.operators.range_join import range_join_within
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") \
+        == "false"
+    assert spark.conf.get("spark.sql.dataFrameQueryContext.enabled") \
+        == "false"
+
+    def points(n, id_col):
+        return spark.range(0, n).select(
+            F.col("id").alias(id_col), derived_lat(F.col("id")).alias("lat"),
+            derived_lon(F.col("id")).alias("lon"))
+
+    a, b = points(100, "a_id"), points(1000, "b_id")
+    range_join_within(a, b, 100.0)           # first-call lookups aside
+    n = _py4j_commands(lambda: range_join_within(a, b, 100.0))
+    assert n <= 650, n

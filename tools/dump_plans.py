@@ -1,6 +1,10 @@
 """Dump .explain("formatted") for declared queries to plans/<tag>/<name>_<suffix>.txt.
 
-Usage: python tools/dump_plans.py --tag r07 --suffix before [--sf-dir DIR] q1 q2 ...
+Usage: python tools/dump_plans.py --tag r07 --suffix before [--sf-dir DIR]
+           [--cores N] q1 q2 ...
+
+The session is local[N] with N shuffle partitions; N defaults to
+SPARK_GRAFT_CPUS, else this machine's CPU count.
 
 Run-varying ids (`#12`, `[id=3]`, `plan_id=7`, `RDD[42]`) are written with
 `N` in place of the number, so a `diff -r` of two dumps is empty exactly
@@ -30,7 +34,8 @@ def main():
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or os.cpu_count()))
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
