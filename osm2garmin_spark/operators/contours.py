@@ -8,23 +8,24 @@ re-implementation in numpy):
   (srtm2osm/Contours.assignContourValues:155-184)
 - crossing positions linearly interpolated: (level−z1)/(z2−z1)
   (Contours.ContinueContour:455,573)
-- fragments merged by exact endpoint equality — a hash join on the endpoint
-  key (Srtm2Osm.addContours:209-272); we quantize endpoints deliberately so
+- fragments merged by exact endpoint equality — one endpoint hash walk per
+  tile (Srtm2Osm.addContours:209-272); we quantize endpoints deliberately so
   float equality is well-defined across partitions (SURVEY.md §7.3)
 - contours with <2 points dropped (Contour.java:73-78)
 - per-cell segment-density pruning (Srtm2Osm.checkContoursDensity:295-355)
 
 Spark shape: the per-raster kernel runs in Arrow batches (mapInPandas, one
-raster never crosses a partition); cross-fragment stitching is an iterated
-self-equi-join on quantized endpoint keys driven to a fixpoint — each
-iteration halves the number of fragments per chain, so it terminates in
-O(log chain-length) rounds.
+raster never crosses a partition); cross-fragment stitching is one grouped
+kernel per (image_id, level) that walks the quantized endpoint graph once —
+the same walk ``marching_squares`` assembles its segments with
+(``walk_chains``).
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator, List, Tuple
+from collections import defaultdict
+from typing import Hashable, Iterator, List, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -45,13 +46,51 @@ def contour_levels(zmin: float, zmax: float, step: float) -> np.ndarray:
     return np.arange(first, zmax + 1e-9, step)
 
 
+def walk_chains(ends: Sequence[Tuple[Hashable, Hashable]]
+                ) -> List[List[Tuple[int, bool]]]:
+    """Chain edges ``ends[i] = (a, b)`` into maximal walks over their
+    shared endpoint keys; every edge is used exactly once, however many
+    edges meet at a key.
+
+    Walks start from degree-1 keys first, then the rest, each group in key
+    order. At each key the walk takes the unused edge whose far end has the
+    lowest key (ties: lowest edge index) and stops at a key with no unused
+    edge. A walk returning to its start key is a closed chain. Returns each
+    chain as ``(edge index, forward)`` steps; forward means the edge is
+    traversed a → b."""
+    adj = defaultdict(list)
+    for i, (a, b) in enumerate(ends):
+        adj[a].append(i)
+        adj[b].append(i)
+    used = [False] * len(ends)
+    chains: List[List[Tuple[int, bool]]] = []
+    for cur in sorted(adj, key=lambda k: (len(adj[k]) != 1, k)):
+        chain = []
+        while True:
+            best = None
+            for i in adj[cur]:
+                if not used[i]:
+                    fwd = ends[i][0] == cur
+                    far = ends[i][1] if fwd else ends[i][0]
+                    if best is None or (far, i) < best[:2]:
+                        best = (far, i, fwd)
+            if best is None:
+                break
+            cur, i, fwd = best
+            used[i] = True
+            chain.append((i, fwd))
+        if chain:
+            chains.append(chain)
+    return chains
+
+
 def marching_squares(grid: np.ndarray, level: float) -> List[np.ndarray]:
     """Extract iso-polylines at ``level`` from a 2D float grid (y, x).
 
     Returns a list of (n, 2) float arrays of (x, y) vertices in grid
     coordinates. Standard marching squares with linear interpolation and
-    deterministic segment assembly (endpoint dict, lowest-key-first chain
-    starts).
+    deterministic segment assembly (``walk_chains`` over the segments' grid
+    edge keys).
 
     NaN samples are nodata (the reference marks |elevation| ≥ 10000 as the
     32768 void sentinel, Srtm2Osm.java:115-121): any 2×2 block touching a
@@ -110,35 +149,12 @@ def marching_squares(grid: np.ndarray, level: float) -> List[np.ndarray]:
         t = 0.5 if z2 == z1 else (level - z1) / (z2 - z1)
         return (float(ix), iy + t)
 
-    # assemble: adjacency on edge keys
-    from collections import defaultdict
-    adj = defaultdict(list)
-    for a, b in segs:
-        adj[a].append(b)
-        adj[b].append(a)
-
-    visited = set()
     lines: List[np.ndarray] = []
-    # deterministic order: start from sorted endpoint keys, degree-1 first
-    keys = sorted(adj.keys(), key=lambda k: (len(adj[k]) != 1, k))
-    for start in keys:
-        if start in visited:
-            continue
-        chain = [start]
-        visited.add(start)
-        cur = start
-        while True:
-            nxts = [n for n in adj[cur] if n not in visited]
-            if not nxts:
-                # closed loop check: can we return to start?
-                if len(chain) > 2 and start in adj[cur]:
-                    chain.append(start)
-                break
-            cur = min(nxts)
-            visited.add(cur)
-            chain.append(cur)
-        if len(chain) >= 2:
-            lines.append(np.array([interp(k) for k in chain]))
+    for chain in walk_chains(segs):
+        i, fwd = chain[0]
+        keys = [segs[i][0] if fwd else segs[i][1]]
+        keys += [segs[i][1] if fwd else segs[i][0] for i, fwd in chain]
+        lines.append(np.array([interp(k) for k in keys]))
     return lines
 
 
@@ -249,110 +265,58 @@ def extract_contours(images: DataFrame, step: float | None = None,
                  .mapInPandas(kernel, schema=CONTOUR_SCHEMA)
 
 
-def _qkey(xc, yc):
-    """quantized endpoint key column (exact-equality join key on floats)"""
-    return (F.round(xc * QUANT).cast("long") * F.lit(1 << 26)
-            + F.round(yc * QUANT).cast("long"))
+def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One (image_id, level) group of ``stitch_contours``."""
+    pdf = pdf.sort_values("frag_id", kind="stable")
+    out, walk, ends = [], [], []          # out rows: (xs, ys, closed)
+    for x, y, cl in zip(pdf["xs"], pdf["ys"], pdf["closed"]):
+        e = np.rint(np.array([x[0], y[0], x[-1], y[-1]]) * QUANT) \
+            if len(x) else None
+        if cl or e is None or not np.isfinite(e).all():
+            out.append((x, y, cl))
+            continue
+        e = e.astype(np.int64).tolist()
+        walk.append((x, y))
+        ends.append(((e[0], e[1]), (e[2], e[3])))
+    for chain in walk_chains(ends):
+        if len(chain) == 1:
+            out.append((*walk[chain[0][0]], False))
+            continue
+        line = np.concatenate([np.column_stack(walk[j])[::1 if fwd else -1]
+                               [n > 0:] for n, (j, fwd) in enumerate(chain)])
+        (j0, f0), (j1, f1) = chain[0], chain[-1]
+        closed = ends[j0][int(not f0)] == ends[j1][int(f1)] and len(line) > 2
+        out.append((line[:, 0], line[:, 1], closed))
+    return pd.DataFrame({
+        "image_id": pdf["image_id"].iat[0], "level": pdf["level"].iat[0],
+        "frag_id": np.arange(len(out), dtype=np.int32),   # renumber from 0
+        "xs": [r[0] for r in out], "ys": [r[1] for r in out],
+        "closed": [bool(r[2]) for r in out]})
 
 
-def stitch_contours(frags: DataFrame, max_iter: int = 16) -> DataFrame:
+def stitch_contours(frags: DataFrame) -> DataFrame:
     """Merge open fragments whose endpoints coincide (within the same
-    image_id + level), iterated to a fixpoint.
+    image_id + level) into maximal polylines — one grouped kernel per
+    (image_id, level), no join and no rounds.
 
     Matching is UNDIRECTED (the reference's Contour join reverses polyline
     direction as needed — two fragments can meet end-to-end or start-to-
     start when they come from differently-oriented marching passes, e.g.
-    across mosaic seams): each open fragment exposes both endpoints; an
-    edge exists wherever any two endpoints share a quantized key, and the
-    merge reverses either side so the shared point sits in the middle.
-
-    Pair selection is a deterministic maximal matching on the fragment
-    graph: every edge gets a deterministic xxhash64 priority and survives
-    only if it is the strict minimum among ALL edges incident to either of
-    its fragments — so each fragment participates in at most one merge per
-    round (round 1's weaker rule let [0,1]+[1,2]+[2,3] emit overlapping
-    fragments), cycles cannot deadlock (the globally minimum edge always
-    survives, guaranteeing progress), and pseudo-random priorities merge
-    an expected constant fraction of each chain per round → O(log L)
-    expected rounds.
+    across mosaic seams): each open fragment is an edge between its two
+    endpoint keys ``(round(x·QUANT), round(y·QUANT))``, and ``walk_chains``
+    uses every edge exactly once, reversing fragments so shared points sit
+    in the middle (the earlier fragment's copy of a shared vertex is kept).
+    A chain that returns to its start key is closed. Closed fragments,
+    fragments with no vertices or a non-finite endpoint, and open fragments
+    that touch no other pass through unchanged. Output ``frag_id``s are
+    renumbered from 0 per group.
     """
-    cur = frags
-    for _ in range(max_iter):
-        open_f = cur.filter(~F.col("closed"))
-        closed_f = cur.filter(F.col("closed"))
-        # both endpoints of every open fragment: at_end=true → the key is
-        # the fragment's LAST vertex
-        ep = open_f.select(
-            "image_id", "level", "frag_id", "xs", "ys",
-            F.explode(F.array(
-                F.struct(F.lit(False).alias("at_end"),
-                         _qkey(F.element_at("xs", 1),
-                               F.element_at("ys", 1)).alias("key")),
-                F.struct(F.lit(True).alias("at_end"),
-                         _qkey(F.element_at("xs", -1),
-                               F.element_at("ys", -1)).alias("key")),
-            )).alias("_ep")) \
-            .select("image_id", "level", "frag_id", "xs", "ys",
-                    F.col("_ep.at_end").alias("at_end"),
-                    F.col("_ep.key").alias("key"))
-        a = ep.select("image_id", "level", "key",
-                      F.col("frag_id").alias("a_id"), F.col("xs").alias("a_xs"),
-                      F.col("ys").alias("a_ys"), F.col("at_end").alias("a_end"))
-        b = ep.select(F.col("image_id").alias("b_img"),
-                      F.col("level").alias("b_lvl"), F.col("key").alias("b_key"),
-                      F.col("frag_id").alias("b_id"), F.col("xs").alias("b_xs"),
-                      F.col("ys").alias("b_ys"), F.col("at_end").alias("b_end"))
-        # undirected: a_id < b_id dedupes the mirrored edge
-        j = a.join(b, (a["image_id"] == b["b_img"]) & (a["level"] == b["b_lvl"])
-                   & (a["key"] == b["b_key"]) & (a["a_id"] < b["b_id"]))
-        # greedy-maximal-matching selection: an edge survives iff its
-        # priority is the minimum among every edge touching its a-fragment
-        # OR its b-fragment. Unique priorities make the filter a valid
-        # matching; the global minimum edge always survives (progress).
-        j = j.withColumn("_pr", F.struct(
-            F.xxhash64("image_id", "level", "a_id", "b_id",
-                       "a_end", "b_end").alias("h"),
-            F.col("a_id").alias("pa"), F.col("b_id").alias("pb"),
-            F.col("a_end").alias("pe"), F.col("b_end").alias("pf")))
-        inc = (j.select("image_id", "level", F.col("a_id").alias("fid"), "_pr")
-               .unionByName(
-                   j.select("image_id", "level", F.col("b_id").alias("fid"), "_pr")))
-        fmin = inc.groupBy("image_id", "level", "fid").agg(F.min("_pr").alias("_mn"))
-        ja = fmin.select("image_id", "level", F.col("fid").alias("a_id"),
-                         F.col("_mn").alias("_mna"))
-        jb = fmin.select("image_id", "level", F.col("fid").alias("b_id"),
-                         F.col("_mn").alias("_mnb"))
-        j = (j.join(ja, ["image_id", "level", "a_id"])
-              .join(jb, ["image_id", "level", "b_id"])
-              .filter((F.col("_pr") == F.col("_mna"))
-                      & (F.col("_pr") == F.col("_mnb"))))
-        n_pairs = j.limit(1).count()
-        if n_pairs == 0:
-            break
-        # orient: a's matched endpoint must be LAST, b's must be FIRST
-        a_xs = F.when(F.col("a_end"), F.col("a_xs")).otherwise(F.reverse("a_xs"))
-        a_ys = F.when(F.col("a_end"), F.col("a_ys")).otherwise(F.reverse("a_ys"))
-        b_xs = F.when(F.col("b_end"), F.reverse("b_xs")).otherwise(F.col("b_xs"))
-        b_ys = F.when(F.col("b_end"), F.reverse("b_ys")).otherwise(F.col("b_ys"))
-        merged = j.select(
-            "image_id", "level", F.col("a_id").alias("frag_id"),
-            F.concat(a_xs, F.slice(b_xs, 2, 1 << 30)).alias("xs"),
-            F.concat(a_ys, F.slice(b_ys, 2, 1 << 30)).alias("ys"),
-        ).withColumn("closed",
-                     (_qkey(F.element_at("xs", 1), F.element_at("ys", 1))
-                      == _qkey(F.element_at("xs", -1), F.element_at("ys", -1)))
-                     & (F.size("xs") > 2))
-        consumed = j.select("image_id", "level", F.col("a_id").alias("frag_id")) \
-            .unionByName(j.select("image_id", "level", F.col("b_id").alias("frag_id")))
-        untouched = open_f.join(consumed, ["image_id", "level", "frag_id"], "left_anti")
-        cur = closed_f.unionByName(untouched.select(*closed_f.columns)) \
-                      .unionByName(merged.select(*closed_f.columns))
-        cur = cur.localCheckpoint() if cur.sparkSession.sparkContext else cur
-    return cur
+    return frags.groupBy("image_id", "level").applyInPandas(
+        _stitch_group, schema=CONTOUR_SCHEMA)
 
 
 def stitch_mosaic(frags: DataFrame, offsets: DataFrame,
-                  max_iter: int = 16, mosaic_col: str = None) -> DataFrame:
+                  mosaic_col: str = None) -> DataFrame:
     """Cross-image contour stitching for a mosaic of adjacent rasters —
     the reference processes one SRTM tile as a 10×10 grid of subtiles
     whose 121-sample windows SHARE their boundary column/row, then joins
@@ -372,14 +336,13 @@ def stitch_mosaic(frags: DataFrame, offsets: DataFrame,
     that mosaic's fragment metadata; VERDICT r2 item 5 fixed the
     single-task window for the multi-mosaic case)."""
     translated = mosaic_translate(frags, offsets, mosaic_col=mosaic_col)
-    return stitch_contours(translated, max_iter=max_iter)
+    return stitch_contours(translated)
 
 
 def mosaic_translate(frags: DataFrame, offsets: DataFrame,
                      mosaic_col: str = None) -> DataFrame:
     """The renumber+translate stage of ``stitch_mosaic``, exposed so plan
-    tests can pin the window's partitioning before ``stitch_contours``
-    truncates lineage (localCheckpoint)."""
+    tests can pin the window's partitioning."""
     j = frags.join(F.broadcast(offsets), "image_id")
     mosaic = (F.col(mosaic_col).cast("string") if mosaic_col
               else F.lit("mosaic"))

@@ -43,6 +43,17 @@ def stream_sessionize(events: DataFrame, ts_col: str = "ts",
                     F.col("sess.end").alias("session_end"), "n_events"))
 
 
+def stream_first_seen_native(events: DataFrame, key_col: str = "key",
+                             bucket_col: str = "bucket") -> DataFrame:
+    """Streaming first-seen dedup (the streaming twin of
+    functions.dedup.exact_dedup): one output row per novel (bucket, key)
+    across micro-batches. Streaming dropDuplicates keeps one state row per
+    distinct key inside the JVM state store, so per-batch work follows the
+    keys present in the batch, with no Python in the loop."""
+    src = events.selectExpr(f"{bucket_col} as bucket", f"{key_col} as key")
+    return src.dropDuplicates(["bucket", "key"])
+
+
 def run_stream_to_memory(stream_df: DataFrame, name: str, timeout_s: float = 30.0):
     """Test helper: drive a streaming query into an in-memory sink until all
     available data is processed; returns the sink table name."""

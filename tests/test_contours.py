@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from osm2garmin_spark.operators.contours import (
@@ -66,7 +67,7 @@ def test_extract_and_stitch_distributed(spark):
     frags = extract_contours(imgs, step=64.0)
     n = frags.count()
     assert n > 0
-    stitched = stitch_contours(frags, max_iter=4)
+    stitched = stitch_contours(frags)
     assert stitched.count() <= n
     with_ids = allocate_contour_ids(stitched)
     ids = [r["contour_id"] for r in with_ids.select("contour_id").collect()]
@@ -240,7 +241,7 @@ def test_mosaic_stitch_joins_across_images(spark):
     assert got_keys == want_keys
 
 
-@pytest.mark.parametrize("n_frags", [3, 4, 6])
+@pytest.mark.parametrize("n_frags", [3, 4, 6, 64])
 def test_stitch_merges_long_chain_without_duplication(spark, n_frags):
     """A fragment must never merge as both left and right side in one round:
     chain [0,1]+[1,2]+[2,3] previously produced overlapping [0,1,2] and
@@ -417,3 +418,94 @@ def test_windowed_adaptivity_differs_per_window(spark):
     # into ONE 25 m interval — the round-2 behavior this fixes
     whole_iv = adaptive_interval(float(grid.max()) - float(grid.min()))
     assert whole_iv == 25.0
+
+
+def _frag_df(spark, lines):
+    """one image "a", level 10: a fragment per list of (x, y) vertices"""
+    import pandas as pd
+    return spark.createDataFrame(pd.DataFrame({
+        "image_id": ["a"] * len(lines),
+        "level": [10.0] * len(lines),
+        "frag_id": list(range(len(lines))),
+        "xs": [[float(p[0]) for p in ln] for ln in lines],
+        "ys": [[float(p[1]) for p in ln] for ln in lines],
+        "closed": [False] * len(lines),
+    }))
+
+
+@pytest.mark.parametrize("lines, n_out", [
+    # a shared endpoint far from the origin merges (no key overflow)
+    ([[(200000.0, 0.0), (200001.0, 0.0)],
+      [(200001.0, 0.0), (200002.0, 0.0)]], 1),
+    # endpoints (5, 100) and (5 + 2^-20, 36) differ: no merge
+    ([[(0.0, 0.0), (5.0, 100.0)],
+      [(5.0 + 2.0 ** -20, 36.0), (9.0, 7.0)]], 2),
+])
+def test_stitch_endpoint_keys_exact(spark, lines, n_out):
+    """Endpoint keys are the exact quantized (x, y) pair: a key must
+    neither overflow at large pixel coordinates nor let one coordinate
+    spill into the other and merge fragments that do not touch."""
+    out = stitch_contours(_frag_df(spark, lines)).collect()
+    assert len(out) == n_out
+    got = sorted(p for r in out for p in zip(r["xs"], r["ys"]))
+    want = sorted(set(p for ln in lines for p in ln))
+    assert got == want
+
+
+def test_stitch_branching_endpoint_uses_each_fragment_once(spark):
+    """Three fragments meeting at one key (a Y): every fragment lands in
+    exactly one output polyline, and the walk at the junction takes the
+    fragment whose far end has the lowest key."""
+    lines = [[(0.0, 0.0), (1.0, 1.0)], [(1.0, 1.0), (2.0, 0.0)],
+             [(1.0, 1.0), (1.0, 3.0)]]
+    out = stitch_contours(_frag_df(spark, lines)).collect()
+    got = sorted((tuple(r["xs"]), tuple(r["ys"])) for r in out)
+    # degree-1 key (0, 0) starts; at (1, 1) the far ends are (2, 0) and
+    # (1, 3), and (1, 3) is the lower key; the fragment left over passes
+    # through as it came
+    assert got == [((0.0, 1.0, 1.0), (0.0, 1.0, 3.0)),
+                   ((1.0, 2.0), (1.0, 0.0))]
+    assert sorted(r["frag_id"] for r in out) == [0, 1]
+
+
+def test_stitch_passes_unkeyable_fragments_through(spark):
+    """A fragment with a NaN endpoint or no vertices has no endpoint key:
+    it passes through unchanged and joins nothing, and its neighbours
+    still chain among themselves."""
+    nan = float("nan")
+    lines = [[(0.0, 0.0), (1.0, 0.0)], [(1.0, 0.0), (2.0, 0.0)],
+             [(2.0, 0.0), (nan, 0.0)], [(nan, 0.0), (3.0, 0.0)], []]
+    out = stitch_contours(_frag_df(spark, lines)).collect()
+    assert sorted(len(r["xs"]) for r in out) == [0, 2, 2, 3]
+    assert not any(r["closed"] for r in out)
+    assert [r["xs"] for r in out if len(r["xs"]) == 3] == [[0.0, 1.0, 2.0]]
+
+
+def test_stitch_plan_is_one_grouped_kernel(spark):
+    """The stitch is one FlatMapGroupsInPandas over (image_id, level):
+    no self-join, no rounds."""
+    frags = _frag_df(spark, [[(0.0, 0.0), (1.0, 0.0)]])
+    qe = stitch_contours(frags)._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(),
+                 qe.executedPlan().toString()):
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert "Join" not in plan, plan
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.integers(9, 40), st.integers(9, 40), st.integers(2, 40),
+       st.integers(0, 2 ** 32 - 1))
+def test_windowed_stitch_matches_unwindowed_sweep(spark, h, w, window, seed):
+    """Random uint8 rasters with samples kept off the levels: windowed
+    extraction (any window, fixed step) stitched has the same keysets as
+    the unwindowed run."""
+    grid = np.random.default_rng(seed).integers(0, 256, (h, w)).astype(np.uint8)
+    grid[grid % 50 == 0] += 1
+    imgs = _img_df(spark, [("g", grid)])
+    frags = extract_contours(imgs, step=50.0).withColumn(
+        "image_id", F.lit("whole")).unionByName(
+        extract_contours(imgs, step=50.0, window=window))
+    got = _keysets(stitch_contours(frags).collect())
+    whole = {k[1]: v for k, v in got.items() if k[0] == "whole"}
+    windowed = {k[1]: v for k, v in got.items() if k[0] == "g"}
+    assert windowed == whole

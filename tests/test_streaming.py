@@ -104,8 +104,7 @@ def test_stream_first_seen_dedup(spark, tmp_path):
     """stateful streaming dedup: duplicate keys across micro-batches are
     emitted exactly once"""
     import pandas as pd
-    from pyspark.sql import functions as F
-    from osm2garmin_spark.streaming.stateful import stream_first_seen
+    from osm2garmin_spark.streaming.stream_ops import stream_first_seen_native
 
     src_dir = str(tmp_path / "b")
     # two files → two micro-batches with overlapping keys
@@ -120,23 +119,22 @@ def test_stream_first_seen_dedup(spark, tmp_path):
               .schema("bucket long, key string")
               .option("maxFilesPerTrigger", 1)
               .parquet(src_dir))
-    q = (stream_first_seen(stream).writeStream
+    q = (stream_first_seen_native(stream).writeStream
          .format("memory").queryName("firstseen")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(60)
-    rows = {(r["bucket"], r["key"])
-            for r in spark.sql("select * from firstseen").collect()}
-    assert rows == {(0, "a"), (0, "b"), (0, "c"), (1, "x")}
+    rows = [(r["bucket"], r["key"])
+            for r in spark.sql("select * from firstseen").collect()]
+    assert sorted(rows) == [(0, "a"), (0, "b"), (0, "c"), (1, "x")]
 
 
 def test_stream_first_seen_state_is_per_key(spark, tmp_path):
     """Scale-shape regression (VERDICT round 1, item 3): many keys across
-    micro-batches, duplicates in later batches. The per-key state layout
-    must admit each key exactly once; batch 2 (all duplicates) emits
-    nothing; the engine-native variant agrees."""
+    micro-batches, duplicates in later batches. The per-key state must
+    admit each key exactly once; batch 2 (all duplicates) emits
+    nothing."""
     import pandas as pd
-    from osm2garmin_spark.streaming.stateful import (
-        stream_first_seen, stream_first_seen_native)
+    from osm2garmin_spark.streaming.stream_ops import stream_first_seen_native
 
     n = 3000
     src_dir = str(tmp_path / "many")
@@ -155,20 +153,13 @@ def test_stream_first_seen_state_is_per_key(spark, tmp_path):
 
     stream = (spark.readStream.schema("bucket long, key string")
               .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    q = (stream_first_seen(stream).writeStream
+    q = (stream_first_seen_native(stream).writeStream
          .format("memory").queryName("firstseen_many")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
-    got = spark.sql("select key from firstseen_many").collect()
-    assert len(got) == len({r["key"] for r in got}) == n + n // 2
-
-    q2 = (stream_first_seen_native(stream).writeStream
-          .format("memory").queryName("firstseen_native")
-          .outputMode("append").trigger(availableNow=True).start())
-    q2.awaitTermination(120)
-    native = {r["key"] for r in spark.sql(
-        "select key from firstseen_native").collect()}
-    assert native == {r["key"] for r in got}
+    got = [r["key"] for r in spark.sql(
+        "select key from firstseen_many").collect()]
+    assert sorted(got) == sorted(f"k{i}" for i in range(n + n // 2))
 
 
 def test_compact_batches_tie_discipline(spark):
@@ -185,37 +176,3 @@ def test_compact_batches_tie_discipline(spark):
            compact_batches(df, "id", batch_size=30).collect()}
     assert out[1] == ("delete", "d7")   # delete wins the version tie
     assert out[2] == ("modify", "m8")   # higher seq wins among modifies
-
-
-def test_stream_first_seen_ttl_rearmed_on_reseen_key():
-    """ADVICE r2: Spark clears a group's timeout on every invocation, so
-    the state.exists early-return must re-arm setTimeoutDuration or a
-    recurring key's state is pinned forever. Unit-level: drive the state
-    function with a fake GroupState and assert the re-arm happens."""
-    import pandas as pd
-    from osm2garmin_spark.streaming.stateful import _make_dedup_fn
-
-    class FakeState:
-        hasTimedOut = False
-        exists = True
-        def __init__(self):
-            self.timeout_set = []
-        def setTimeoutDuration(self, ms):
-            self.timeout_set.append(ms)
-        def getCurrentProcessingTimeMs(self):
-            return 0
-        def update(self, v):
-            pass
-        def remove(self):
-            pass
-
-    st = FakeState()
-    fn = _make_dedup_fn(ttl_ms=5000)
-    list(fn((0, "k"), iter([pd.DataFrame({"bucket": [0], "key": ["k"]})]), st))
-    assert st.timeout_set == [5000], "re-seen key must re-arm its TTL"
-
-    # and with ttl_ms=None nothing is armed
-    st2 = FakeState()
-    fn2 = _make_dedup_fn(ttl_ms=None)
-    list(fn2((0, "k"), iter([pd.DataFrame({"bucket": [0], "key": ["k"]})]), st2))
-    assert st2.timeout_set == []
