@@ -53,33 +53,34 @@ def walk_chains(ends: Sequence[Tuple[Hashable, Hashable]]
     edges meet at a key.
 
     Walks start from degree-1 keys first, then the rest, each group in key
-    order. At each key the walk takes the unused edge whose far end has the
-    lowest key (ties: lowest edge index) and stops at a key with no unused
-    edge. A walk returning to its start key is a closed chain. Returns each
-    chain as ``(edge index, forward)`` steps; forward means the edge is
-    traversed a → b."""
+    order; a start key keeps starting walks until none of its edges is
+    unused. At each key the walk takes the unused edge whose far end has
+    the lowest key (ties: lowest edge index) and stops at a key with no
+    unused edge. A walk returning to its start key is a closed chain.
+    Returns each chain as ``(edge index, forward)`` steps; forward means
+    the edge is traversed a → b."""
     adj = defaultdict(list)
     for i, (a, b) in enumerate(ends):
         adj[a].append(i)
         adj[b].append(i)
     used = [False] * len(ends)
     chains: List[List[Tuple[int, bool]]] = []
-    for cur in sorted(adj, key=lambda k: (len(adj[k]) != 1, k)):
-        chain = []
-        while True:
-            best = None
-            for i in adj[cur]:
-                if not used[i]:
-                    fwd = ends[i][0] == cur
-                    far = ends[i][1] if fwd else ends[i][0]
-                    if best is None or (far, i) < best[:2]:
-                        best = (far, i, fwd)
-            if best is None:
-                break
-            cur, i, fwd = best
-            used[i] = True
-            chain.append((i, fwd))
-        if chain:
+    for start in sorted(adj, key=lambda k: (len(adj[k]) != 1, k)):
+        while not all(used[i] for i in adj[start]):
+            cur, chain = start, []
+            while True:
+                best = None
+                for i in adj[cur]:
+                    if not used[i]:
+                        fwd = ends[i][0] == cur
+                        far = ends[i][1] if fwd else ends[i][0]
+                        if best is None or (far, i) < best[:2]:
+                            best = (far, i, fwd)
+                if best is None:
+                    break
+                cur, i, fwd = best
+                used[i] = True
+                chain.append((i, fwd))
             chains.append(chain)
     return chains
 
@@ -270,12 +271,11 @@ def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.sort_values("frag_id", kind="stable")
     out, walk, ends = [], [], []          # out rows: (xs, ys, closed)
     for x, y, cl in zip(pdf["xs"], pdf["ys"], pdf["closed"]):
-        e = np.rint(np.array([x[0], y[0], x[-1], y[-1]]) * QUANT) \
-            if len(x) else None
-        if cl or e is None or not np.isfinite(e).all():
+        if cl:
             out.append((x, y, cl))
             continue
-        e = e.astype(np.int64).tolist()
+        e = np.rint(np.array([x[0], y[0], x[-1], y[-1]]) * QUANT) \
+            .astype(np.int64).tolist()
         walk.append((x, y))
         ends.append(((e[0], e[1]), (e[2], e[3])))
     for chain in walk_chains(ends):
@@ -306,10 +306,13 @@ def stitch_contours(frags: DataFrame) -> DataFrame:
     endpoint keys ``(round(x·QUANT), round(y·QUANT))``, and ``walk_chains``
     uses every edge exactly once, reversing fragments so shared points sit
     in the middle (the earlier fragment's copy of a shared vertex is kept).
-    A chain that returns to its start key is closed. Closed fragments,
-    fragments with no vertices or a non-finite endpoint, and open fragments
-    that touch no other pass through unchanged. Output ``frag_id``s are
-    renumbered from 0 per group.
+    A chain that returns to its start key is closed. Closed fragments and
+    open fragments that touch no other pass through unchanged. Output
+    ``frag_id``s are renumbered from 0 per group.
+
+    Every fragment of one (image_id, level) is one pandas group on one
+    Python worker: parallelism is capped at the number of groups, and each
+    group must fit in that worker's memory.
     """
     return frags.groupBy("image_id", "level").applyInPandas(
         _stitch_group, schema=CONTOUR_SCHEMA)
@@ -334,7 +337,9 @@ def stitch_mosaic(frags: DataFrame, offsets: DataFrame,
     independent mosaics renumber AND stitch in parallel — with it unset,
     everything is one mosaic and the window is a single task (bounded by
     that mosaic's fragment metadata; VERDICT r2 item 5 fixed the
-    single-task window for the multi-mosaic case)."""
+    single-task window for the multi-mosaic case). The stitch's groups are
+    then whole-mosaic levels: each level's fragments are one pandas group
+    on one Python worker and must fit in its memory."""
     translated = mosaic_translate(frags, offsets, mosaic_col=mosaic_col)
     return stitch_contours(translated)
 

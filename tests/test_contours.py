@@ -468,17 +468,21 @@ def test_stitch_branching_endpoint_uses_each_fragment_once(spark):
     assert sorted(r["frag_id"] for r in out) == [0, 1]
 
 
-def test_stitch_passes_unkeyable_fragments_through(spark):
-    """A fragment with a NaN endpoint or no vertices has no endpoint key:
-    it passes through unchanged and joins nothing, and its neighbours
-    still chain among themselves."""
-    nan = float("nan")
-    lines = [[(0.0, 0.0), (1.0, 0.0)], [(1.0, 0.0), (2.0, 0.0)],
-             [(2.0, 0.0), (nan, 0.0)], [(nan, 0.0), (3.0, 0.0)], []]
+def test_stitch_keeps_every_fragment_at_odd_degree_keys(spark):
+    """Keys where three or more fragments meet: a walk may leave its start
+    key with fragments unused there, and the key starts walks again until
+    none is left, so every fragment lands in exactly one output polyline.
+    Keys k are the points (k, 0); fragment i carries a middle vertex at
+    height i + 1."""
+    ends = [(0, 2), (0, 2), (0, 4), (0, 4), (1, 2), (1, 5), (3, 4), (3, 6),
+            (5, 6), (5, 6)]
+    lines = [[(a, 0.0), ((a + b) / 2, i + 1.0), (b, 0.0)]
+             for i, (a, b) in enumerate(ends)]
     out = stitch_contours(_frag_df(spark, lines)).collect()
-    assert sorted(len(r["xs"]) for r in out) == [0, 2, 2, 3]
-    assert not any(r["closed"] for r in out)
-    assert [r["xs"] for r in out if len(r["xs"]) == 3] == [[0.0, 1.0, 2.0]]
+    middles = sorted(p for r in out for p in zip(r["xs"], r["ys"]) if p[1])
+    assert middles == sorted(ln[1] for ln in lines)
+    # a chain of k fragments keeps 2k + 1 of their 3k vertices
+    assert sum(len(r["xs"]) for r in out) == 2 * len(lines) + len(out)
 
 
 def test_stitch_plan_is_one_grouped_kernel(spark):
