@@ -27,6 +27,12 @@ def map_unit(deg: Column) -> Column:
     return trunc_toward_zero(nudged * F.lit(float(FULL_CIRCLE)) / F.lit(360.0))
 
 
+def map_unit_or_null(deg: Column) -> Column:
+    """``map_unit``, NULL for a NaN degree (map_unit truncates NaN to 0):
+    the tiling paths drop a NaN coordinate as they drop a NULL one."""
+    return F.when(~F.isnan(deg), map_unit(deg))
+
+
 def map_unit_sql(deg_expr: str) -> str:
     """Identical formula as ANSI SQL text (runs on Spark *and* DuckDB)."""
     nudged = (f"(CASE WHEN ({deg_expr}) > 0 THEN ({deg_expr}) + 1e-06 "

@@ -58,7 +58,7 @@ from ..expressions import map_unit
 from ..geo.area import Area
 from ..geo.units import to_degrees
 from ..split.density import collect_density
-from ..split.quadtree import CellIndex, split_area
+from ..split.quadtree import KeyIndex, split_area
 
 _LOG = logging.getLogger(__name__)
 
@@ -513,11 +513,10 @@ def plan_strata(neighbors: DataFrame, k: int, n_lat: str = "n_lat",
     windows = [(grid.lon_to_x(a.min_long), grid.lon_to_x(a.max_long),
                 grid.lat_to_y(a.min_lat), grid.lat_to_y(a.max_lat))
                for a in areas]
-    index = CellIndex(*grid.cells(), grid.width, grid.height)
+    index = KeyIndex(*grid.packed(), grid.width, grid.height)
     leaves = []
-    for a, (colsum, _) in zip(areas, index.window_sums(windows)):
-        density = int(colsum.sum()) / (to_degrees(a.height)
-                                       * to_degrees(a.width))
+    for a, s in zip(areas, index.window_stats(windows)):
+        density = s[0] / (to_degrees(a.height) * to_degrees(a.width))
         # frexp: cell = m·2**e with 0.5 <= m < 1, so 2**(e-1) <= cell
         leaves.append((a, math.frexp(_cell_for_density(density, k))[1] - 1))
     default = Counter(s for _, s in leaves).most_common(1)[0][0]

@@ -28,7 +28,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..geo.area import Area
-from ..expressions import map_unit
+from ..expressions import map_unit_or_null
 
 #: coarse candidate-grid resolution (shift): cells of 2^19 map units
 #: (~11.25°/1024... i.e. 2^19/46603 ≈ 11.25 degrees / 32nd of the planet).
@@ -101,13 +101,14 @@ def assign_points_to_tiles(points: DataFrame, tiles: Sequence[Area],
     """points × tiles multi-assignment join.
 
     Input: any DataFrame with degree lat/lon columns. Output: input columns
-    + lat_mu/lon_mu + tile_id, one row per (point, containing tile).
+    + lat_mu/lon_mu + tile_id, one row per (point, containing tile). A
+    point with a NULL or NaN coordinate is in no tile.
     """
     spark = points.sparkSession
     cand = _tile_candidates_df(spark, tiles, overlap, cell_shift)
 
-    lat_mu = map_unit(F.col(lat_col))
-    lon_mu = map_unit(F.col(lon_col))
+    lat_mu = map_unit_or_null(F.col(lat_col))
+    lon_mu = map_unit_or_null(F.col(lon_col))
     pts = points.withColumn("lat_mu", lat_mu).withColumn("lon_mu", lon_mu)
     pts = pts.withColumn("cell_x", F.shiftright(F.col("lon_mu") - F.lit(_ORIGIN_LON), cell_shift))
     pts = pts.withColumn("cell_y", F.shiftright(F.col("lat_mu") - F.lit(_ORIGIN_LAT), cell_shift))

@@ -47,12 +47,15 @@ def run_tiling_pipeline(points: DataFrame, max_nodes: int = DEFAULT_MAX_NODES,
     multi-assignment. Returns None for an empty input.
 
     split_strategy:
-    - "driver"      (default) collect the occupied-cell table, run the
-                    integer quadtree on the driver — fastest locally;
-                    driver memory O(occupied cells) ≤ grid size.
+    - "driver"      (default) collect the occupied-cell table as packed
+                    keys, run the integer quadtree on the driver — fastest
+                    locally; driver memory O(occupied cells) ≤ grid size:
+                    the driver's RSS peaks ~40 bytes per occupied cell
+                    above its start (53 MB for 1.39M cells at resolution
+                    13, 2M points, local[4] on a 4-vCPU VM).
     - "distributed" level-synchronous quadtree (split/distributed.py):
-                    driver holds only per-node 1-D vectors; use when the
-                    occupied-cell table itself is too big to collect.
+                    driver holds seven integers per active node; use when
+                    the occupied-cell table itself is too big to collect.
     Both produce bit-identical tiles (tests/test_distributed_split.py).
     """
     if split_strategy == "distributed":

@@ -1,16 +1,19 @@
 """Spark aggregator of the shared quadtree loop (``quadtree.split_levels``).
 
 The driver split (``quadtree.split_area``) collects the occupied-cell
-table and answers each node's axis sums from an in-memory index. Here the
+table and answers each node's stats from an in-memory index. Here the
 cell table stays in Spark: at each tree level, ONE Spark job aggregates
-every active node's column sums and row sums (broadcast join of cells onto
-the nodes' windows, one groupBy), and the driver runs only the integer
-split logic on those 1-D vectors. Same loop, same tiles, bit for bit.
+every active node's seven integers (count, Σx·cnt, Σy·cnt, occupied x/y
+extent — ``quadtree.Stats``) with a broadcast join of the cells onto the
+nodes' windows and one ``groupBy("node_id")``, and the driver runs only
+the integer split logic on them. Same loop, same tiles, bit for bit.
 
-Driver memory: O(Σ window perimeter) per level — independent of the number
-of input rows AND of the occupied cells; Spark jobs: one aggregation per
-tree level (≈ 2·log2(n_tiles) + trim depth), plus one at a level whose
-rounded bounds must be read again (see ``quadtree``'s module notes).
+Driver memory: O(active nodes) per level — seven integers per node,
+independent of the number of input rows, of the occupied cells and of
+the window sizes — plus the broadcast block table, capped at
+``_MAX_BLOCK_ROWS``; Spark jobs: one aggregation per tree level
+(≈ 2·log2(n_tiles) + trim depth), plus one at a level whose rounded
+bounds must be read again (see ``quadtree``'s module notes).
 """
 
 from __future__ import annotations
@@ -18,12 +21,10 @@ from __future__ import annotations
 from functools import partial
 from typing import List, Sequence, Tuple
 
-import numpy as np
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..geo.area import Area, PLANET, round_area
-from .quadtree import AxisSums, Window, split_levels
+from .quadtree import Stats, Window, split_levels
 
 
 #: broadcast block-table row budget (≈15 MB at ~56 B/row)
@@ -40,9 +41,9 @@ def _block_shift(spans: List[Tuple[int, int]]) -> int:
     return 40
 
 
-def _aggregate_level(cells: DataFrame, windows: Sequence[Window]
-                     ) -> List[AxisSums]:
-    """One Spark job: per-window column/row sums of ``cells``.
+def _level_stats(cells: DataFrame, windows: Sequence[Window]) -> DataFrame:
+    """Per-window stats of ``cells``: (node_id, n, sx, sy, x_lo, x_hi,
+    y_lo, y_hi), one row per non-empty window, node_id = its list index.
 
     The cells→windows association is an EQUI-join on a power-of-two block
     prefix of the cell coordinate (each window explodes to the blocks it
@@ -56,40 +57,32 @@ def _aggregate_level(cells: DataFrame, windows: Sequence[Window]
 
     k = _block_shift([(x1 - x0, y1 - y0) for x0, x1, y0, y1 in windows])
     rows = []
-    # the window's position in this call's list is its node id
     for nid, (wx0, wx1, wy0, wy1) in enumerate(windows):
         for bx in range(wx0 >> k, ((wx1 - 1) >> k) + 1):
             for by in range(wy0 >> k, ((wy1 - 1) >> k) + 1):
                 rows.append((nid, bx, by, wx0, wx1, wy0, wy1))
     win = spark.createDataFrame(pd.DataFrame(
         rows, columns=["node_id", "_bx", "_by", "wx0", "wx1", "wy0", "wy1"]))
-    j = (cells
-         .withColumn("_bx", F.shiftright("cell_x", k))
-         .withColumn("_by", F.shiftright("cell_y", k))
-         .join(F.broadcast(win), ["_bx", "_by"])
-         .filter((F.col("cell_x") >= F.col("wx0")) & (F.col("cell_x") < F.col("wx1"))
-                 & (F.col("cell_y") >= F.col("wy0")) & (F.col("cell_y") < F.col("wy1"))))
-    # BOTH axis sums in ONE action: each joined cell explodes to an
-    # (axis, coordinate) pair and a single groupBy delivers colsum and
-    # rowsum together. Round 4 ran two separate toPandas() actions, which
-    # re-scanned cells + re-broadcast the window table per axis and cost
-    # ~6 Spark jobs per level under AQE (measured, 20M-row bench); one
-    # action is ~3 (shuffle map + final + broadcast) and one cells scan.
-    ex = (j.select("node_id", F.explode(F.array(
-            F.struct(F.lit(0).alias("ax"), F.col("cell_x").alias("coord"),
-                     F.col("cnt")),
-            F.struct(F.lit(1).alias("ax"), F.col("cell_y").alias("coord"),
-                     F.col("cnt")))).alias("e"))
-          .select("node_id", "e.ax", "e.coord", "e.cnt"))
-    both = (ex.groupBy("node_id", "ax", "coord").agg(F.sum("cnt").alias("s"))
-            .toPandas())
+    x, y, cnt = F.col("cell_x"), F.col("cell_y"), F.col("cnt")
+    return (cells
+            .withColumn("_bx", F.shiftright("cell_x", k))
+            .withColumn("_by", F.shiftright("cell_y", k))
+            .join(F.broadcast(win), ["_bx", "_by"])
+            .filter((x >= F.col("wx0")) & (x < F.col("wx1"))
+                    & (y >= F.col("wy0")) & (y < F.col("wy1")))
+            .groupBy("node_id")
+            .agg(F.sum(cnt).alias("n"), F.sum(x * cnt).alias("sx"),
+                 F.sum(y * cnt).alias("sy"), F.min(x).alias("x_lo"),
+                 F.max(x).alias("x_hi"), F.min(y).alias("y_lo"),
+                 F.max(y).alias("y_hi")))
 
-    out = [(np.zeros(x1 - x0, dtype=np.int64), np.zeros(y1 - y0, dtype=np.int64))
-           for x0, x1, y0, y1 in windows]
-    for nid, ax, coord, s in both[["node_id", "ax", "coord", "s"]].itertuples(
-            index=False):
-        x0, _, y0, _ = windows[nid]
-        out[nid][ax][int(coord) - (y0 if ax else x0)] = s
+
+def _aggregate_level(cells: DataFrame, windows: Sequence[Window]
+                     ) -> List[Stats]:
+    """One Spark job: ``_level_stats`` collected into ``Stats`` per window."""
+    out: List[Stats] = [None] * len(windows)
+    for r in _level_stats(cells, windows).collect():
+        out[r[0]] = tuple(int(v) for v in r[1:])
     return out
 
 

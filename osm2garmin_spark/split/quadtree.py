@@ -3,15 +3,16 @@
 This is the analytics core of the reference's splitter pass 1, ported
 integer-exact so tile boundaries reproduce bit-for-bit. There is ONE split
 algorithm, ``split_levels``: a level-synchronous walk of the quadtree that
-needs, for every node, only the column sums and row sums of the cell
-counts inside its window. Two aggregators supply those sums:
+needs, for every node, seven integers over the cells inside its window
+(``Stats``): the count n, Σx·cnt, Σy·cnt and the occupied x/y extent.
+Two aggregators supply them:
 
-- ``CellIndex`` (driver, ``split_area``): the occupied-cell table the
-  density scan returns, sorted x-major and y-major with running counts.
-  A window's axis sums cost O((w + h)·log n) by binary search, and no
-  dense grid is ever built, so driver memory follows the occupied cells,
-  not the grid (at resolution 13 the planet grid has 31.7M cells, of
-  which a typical corpus occupies a few percent).
+- ``KeyIndex`` (driver, ``split_area``): the occupied-cell table the
+  density scan returns, sorted by its x-major key x·height + y, with
+  running counts and running y·counts. A window's stats cost O(w·log n)
+  by binary search, and no dense grid is ever built, so driver memory
+  follows the occupied cells, not the grid (at resolution 13 the planet
+  grid has 31.7M cells, of which a typical corpus occupies a few percent).
 - ``split.distributed`` (Spark): one aggregation job per tree level, for
   cell tables too big to collect.
 
@@ -24,16 +25,20 @@ tests compare ``split_levels`` against:
                                point, 3/5-quantile clamp, even-parity split,
                                interleave+reverse result mixing)
 
-Why per-node 1-D sums suffice (relied on by ``split_levels``):
+Why seven integers per node suffice (relied on by ``split_levels``):
 - a node's content is the global cell table restricted to its final
   bounds: a child's window ⊆ its parent's final bounds ⊆ ... ⊆ the density
   grid, so no clip chain is needed.
-- trim only shaves empty border rows/columns, so when the rounded bounds
-  cover the trimmed extent and stay inside the window, the window's column
-  and row sums, sliced to the bounds, ARE the bounds' sums. Every node's
-  window has cell-aligned edges and even cell dimensions (rounding forces
-  even dims; split midpoints are even), so RoundingUtils.round's parity
-  push cannot leave the window, and this is the rule.
+- trim shaves empty border rows/columns, so the trimmed extent is the
+  occupied x/y extent. The split point is the weighted mean of the column
+  (or row) sums measured from the bounds' edge, Σ(x − x0)·cnt / n =
+  (Σx·cnt − x0·n) / n, so the sums themselves are never needed.
+- when the rounded bounds cover the occupied extent and stay inside the
+  window, the window's stats ARE the bounds' stats: the cells between
+  them are empty. Every node's window has cell-aligned edges and even
+  cell dimensions (rounding forces even dims; split midpoints are even),
+  so RoundingUtils.round's parity push cannot leave the window, and this
+  is the rule.
 - the two exceptions are read again over the final bounds, one more
   aggregation that level: the ±85° clamp can cut the bottom or top cell
   row off an occupied extent, and the root window (the density grid ∩ the
@@ -60,8 +65,9 @@ from ..geo.units import to_degrees, to_map_unit
 #: a node window in cell coordinates of the density grid: (x0, x1, y0, y1),
 #: half-open on both axes
 Window = Tuple[int, int, int, int]
-#: per-window (column sums over x0..x1, row sums over y0..y1)
-AxisSums = Tuple[np.ndarray, np.ndarray]
+#: a window's cell-count stats (n, Σx·cnt, Σy·cnt, x_lo, x_hi, y_lo, y_hi):
+#: extents inclusive, all in cell coordinates; None for an empty window
+Stats = Optional[Tuple[int, int, int, int, int, int, int]]
 
 
 class DensityGrid:
@@ -70,19 +76,20 @@ class DensityGrid:
     Indexing is [x][y] like the reference (x = longitude cell, y = latitude
     cell); shift = 24 - resolution (DensityMap.java:37-45).
 
-    Built from an occupied-cell table (``cells=(xs, ys, counts)``, unique
-    cells, as the density scan returns it), the grid keeps only that table
-    and ``grid`` builds the dense array the first time it is read. From
-    then on the dense array is the histogram, so callers may write to it.
+    Built from an occupied-cell table (``keys=(keys, counts)``: unique
+    x-major keys x·height + y in ascending order, as the density scan
+    returns them), the grid keeps only that table and ``grid`` builds the
+    dense array the first time it is read. From then on the dense array is
+    the histogram, so callers may write to it.
     """
 
     def __init__(self, area: Area, trim: bool, resolution: int,
                  counts: Optional[np.ndarray] = None,
-                 cells: Optional[Tuple[np.ndarray, np.ndarray, np.ndarray]] = None):
+                 keys: Optional[Tuple[np.ndarray, np.ndarray]] = None):
         assert 1 <= resolution <= 24
         self.shift = 24 - resolution
         self.trim_enabled = trim
-        self._cells = None
+        self._keys = None
         if area is EMPTY_AREA or (area.width == 0 or area.height == 0):
             self.bounds = EMPTY_AREA
             self.width = 0
@@ -93,10 +100,10 @@ class DensityGrid:
         self.bounds = round_area(area, resolution)
         self.height = self.bounds.height >> self.shift
         self.width = self.bounds.width >> self.shift
-        if cells is not None:
+        if keys is not None:
             self._grid = None
-            self._cells = cells
-            self.total = int(cells[2].sum())
+            self._keys = keys
+            self.total = int(keys[1].sum())
             return
         if counts is None:
             self._grid = np.zeros((self.width, self.height), dtype=np.int64)
@@ -108,18 +115,24 @@ class DensityGrid:
     @property
     def grid(self) -> np.ndarray:
         if self._grid is None:
-            xs, ys, cnts = self._cells
+            keys, cnts = self._keys
             self._grid = np.zeros((self.width, self.height), dtype=np.int64)
-            self._grid[xs, ys] = cnts
-            self._cells = None
+            # C order: the flat index of [x, y] is the key x·height + y
+            self._grid.reshape(-1)[keys] = cnts
+            self._keys = None
         return self._grid
+
+    def packed(self) -> Tuple[np.ndarray, np.ndarray]:
+        """The occupied cells as (ascending keys x·height + y, counts)."""
+        if self._keys is not None:
+            return self._keys
+        keys = np.flatnonzero(self._grid)
+        return keys, self._grid.reshape(-1)[keys]
 
     def cells(self) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
         """The occupied cells as (xs, ys, counts) int64 arrays."""
-        if self._cells is not None:
-            return self._cells
-        xs, ys = np.nonzero(self._grid)
-        return xs, ys, self._grid[xs, ys]
+        keys, cnts = self.packed()
+        return keys // self.height, keys % self.height, cnts
 
     # --- cell codecs (DensityMap.java:203-219) -------------------------
     def lon_to_x(self, lon: int) -> int:
@@ -163,10 +176,14 @@ class DensityGrid:
         height = bounds.height >> self.shift
         max_x = min(sub.width >> self.shift, width)
         max_y = min(sub.height >> self.shift, height)
-        counts = self.grid[start_x:start_x + max_x, start_y:start_y + max_y]
+        # a trimmed area's parity push can overhang this grid, where the
+        # reference's arraycopy would throw; the cells out there are empty
+        ax, bx = max(start_x, 0), min(start_x + max_x, self.width)
+        ay, by = max(start_y, 0), min(start_y + max_y, self.height)
+        counts = self.grid[ax:bx, ay:by]
         if counts.shape != (width, height):
             padded = np.zeros((width, height), dtype=np.int64)
-            padded[:max_x, :max_y] = counts
+            padded[ax - start_x:bx - start_x, ay - start_y:by - start_y] = counts
             counts = padded
         return DensityGrid(bounds, self.trim_enabled, resolution, counts=counts)
 
@@ -244,8 +261,8 @@ class SplittableDensityArea:
             return [bounds]
 
         split_result = None
-        split_x = self._get_split_horiz()
-        split_y = self._get_split_vert()
+        split_x = self._get_split(axis=1)
+        split_y = self._get_split(axis=0)
 
         if self.get_aspect_ratio() <= 1.0 and d.height >= 4 and split_y is not None:
             split_result = self._split_vert(split_y)
@@ -261,11 +278,11 @@ class SplittableDensityArea:
                             split_result[1].split(max_nodes))
 
     # --- split point selection (SplittableDensityArea.java:127-196) -----
-    def _get_split_horiz(self) -> Optional[int]:
-        return _split_point(self.densities.grid.sum(axis=1))
-
-    def _get_split_vert(self) -> Optional[int]:
-        return _split_point(self.densities.grid.sum(axis=0))
+    def _get_split(self, axis: int) -> Optional[int]:
+        """Weighted-mean cell of the column (axis=1) or row (axis=0) sums."""
+        sums = self.densities.grid.sum(axis=axis)
+        ws = int((sums * np.arange(len(sums), dtype=np.int64)).sum())
+        return self._limit(0, len(sums), ws // int(sums.sum()))
 
     @staticmethod
     def _limit(first: int, second: int, calc_offset: int) -> Optional[int]:
@@ -298,12 +315,6 @@ def _aspect_ratio(bounds: Area, width: int, height: int) -> float:
     width1 = int(np.trunc(width * math.cos(math.radians(to_degrees(bounds.min_lat)))))
     width2 = int(np.trunc(width * math.cos(math.radians(to_degrees(bounds.max_lat)))))
     return float(max(width1, width2)) / height
-
-
-def _split_point(sums: np.ndarray) -> Optional[int]:
-    """Weighted-mean cell along one axis, clamped by ``_limit``."""
-    ws = int((sums * np.arange(len(sums), dtype=np.int64)).sum())
-    return SplittableDensityArea._limit(0, len(sums), ws // int(sums.sum()))
 
 
 def _halves_horiz(b: Area, split_x: int, shift: int) -> Tuple[Area, Area]:
@@ -379,39 +390,25 @@ class _Node:
     children: Optional[Tuple["_Node", "_Node"]] = None
 
 
-def _occupied_extent(window: Area, colsum: np.ndarray, rowsum: np.ndarray,
-                     shift: int) -> Optional[Area]:
-    """DensityGrid._trim's shave over the window's axis sums: the
-    occupied extent, or None if the window is empty."""
-    occ_x = np.nonzero(colsum > 0)[0]
-    if len(occ_x) == 0:
-        return None
-    # rowsum over the window's x-range equals rowsum over the trimmed
-    # x-range: shaved columns are empty, contributing nothing
-    occ_y = np.nonzero(rowsum > 0)[0]
-    return Area(window.min_lat + (int(occ_y[0]) << shift),
-                window.min_long + (int(occ_x[0]) << shift),
-                window.min_lat + ((int(occ_y[-1]) + 1) << shift),
-                window.min_long + ((int(occ_x[-1]) + 1) << shift))
-
-
 def _covers(outer: Area, inner: Area) -> bool:
     return (outer.min_lat <= inner.min_lat and inner.max_lat <= outer.max_lat
             and outer.min_long <= inner.min_long
             and inner.max_long <= outer.max_long)
 
 
-def _decide(b: Area, colsum: np.ndarray, rowsum: np.ndarray,
-            max_nodes: int, shift: int) -> Optional[Tuple[Area, Area]]:
+def _decide(b: Area, w: Window, s: Stats, max_nodes: int,
+            shift: int) -> Optional[Tuple[Area, Area]]:
     """Reference split() control flow (SplittableDensityArea.java:52-100)
-    on the final bounds' axis sums. Returns the two halves, or None for a
-    leaf."""
-    width = b.width >> shift
-    height = b.height >> shift
-    if int(colsum.sum()) <= max_nodes or (width < 4 and height < 4):
+    on the stats of the final bounds ``b`` (cells ``w``). Returns the two
+    halves, or None for a leaf."""
+    n, sx, sy = s[:3]
+    x0, x1, y0, y1 = w
+    width, height = x1 - x0, y1 - y0
+    if n <= max_nodes or (width < 4 and height < 4):
         return None
-    split_x = _split_point(colsum)
-    split_y = _split_point(rowsum)
+    # weighted-mean cell from the bounds' edge: Σ(x − x0)·cnt // n
+    split_x = SplittableDensityArea._limit(0, width, (sx - x0 * n) // n)
+    split_y = SplittableDensityArea._limit(0, height, (sy - y0 * n) // n)
     aspect = _aspect_ratio(b, width, height)
     if aspect <= 1.0 and height >= 4 and split_y is not None:
         return _halves_vert(b, split_y, shift)
@@ -430,7 +427,7 @@ def _order(n: _Node) -> List[Area]:
     return _mix_results(_order(n.children[0]), _order(n.children[1]))
 
 
-def _split_tree(aggregate: Callable[[Sequence[Window]], List[AxisSums]],
+def _split_tree(aggregate: Callable[[Sequence[Window]], List[Stats]],
                 origin: Area, bbounds: Area, resolution: int,
                 max_nodes: int, stats: dict) -> List[Area]:
     shift = 24 - resolution
@@ -448,49 +445,48 @@ def _split_tree(aggregate: Callable[[Sequence[Window]], List[AxisSums]],
                 (a.min_lat - origin.min_lat) >> shift,
                 (a.max_lat - origin.min_lat) >> shift)
 
-    def sums_of(areas: List[Area]) -> List[AxisSums]:
+    def stats_of(areas: List[Area]) -> List[Stats]:
         stats["levels"] += 1
         return aggregate([cells_of(a) for a in areas])
 
     root = _Node(root_window)
     active = [root]
     while active:
-        live = []              # (node, colsum, rowsum) over its final bounds
+        live = []              # (node, stats over its final bounds)
         refetch = []
-        for n, (colsum_w, rowsum_w) in zip(active, sums_of([n.window for n in active])):
-            trimmed = _occupied_extent(n.window, colsum_w, rowsum_w, shift)
-            if trimmed is None:
+        for n, s in zip(active, stats_of([n.window for n in active])):
+            if s is None:
                 continue
+            x_lo, x_hi, y_lo, y_hi = s[3:]
+            trimmed = Area(origin.min_lat + (y_lo << shift),
+                           origin.min_long + (x_lo << shift),
+                           origin.min_lat + ((y_hi + 1) << shift),
+                           origin.min_long + ((x_hi + 1) << shift))
             b = n.bounds = _round_within(trimmed, n.window, resolution)
             if _covers(b, trimmed) and _covers(n.window, b):
-                # the window's content is the final bounds' content: slice
-                # its sums down to the bounds (shaved border rows/cols are
-                # empty, so the sums are unchanged)
-                live.append((n,
-                             colsum_w[(b.min_long - n.window.min_long) >> shift:
-                                      (b.max_long - n.window.min_long) >> shift],
-                             rowsum_w[(b.min_lat - n.window.min_lat) >> shift:
-                                      (b.max_lat - n.window.min_lat) >> shift]))
+                # the cells between the occupied extent and the window
+                # are empty: the window's stats are the final bounds'
+                live.append((n, s))
             else:
                 # the rounding cut into the occupied extent (the ±85° clamp)
                 # or pushed past the window (root parity overhang)
                 refetch.append(n)
         if refetch:
-            live += [(n, c, r) for n, (c, r)
-                     in zip(refetch, sums_of([n.bounds for n in refetch]))]
+            stats["refetched"] += len(refetch)
+            live += zip(refetch, stats_of([n.bounds for n in refetch]))
         active = []
-        for n, colsum, rowsum in live:
-            if not colsum.any():
+        for n, s in live:
+            if s is None:
                 n.bounds = None
                 continue
-            halves = _decide(n.bounds, colsum, rowsum, max_nodes, shift)
+            halves = _decide(n.bounds, cells_of(n.bounds), s, max_nodes, shift)
             if halves is not None:
                 n.children = (_Node(halves[0]), _Node(halves[1]))
                 active.extend(n.children)
     return _order(root)
 
 
-def split_levels(aggregate: Callable[[Sequence[Window]], List[AxisSums]],
+def split_levels(aggregate: Callable[[Sequence[Window]], List[Stats]],
                  origin: Area, exact_area: Area, resolution: int,
                  max_nodes: int, first_map_id: int = 63240001,
                  stats: Optional[dict] = None) -> List[Area]:
@@ -498,15 +494,16 @@ def split_levels(aggregate: Callable[[Sequence[Window]], List[AxisSums]],
 
     ``origin`` is the rounded area of the density grid (cell coordinates
     are relative to its min corner). ``aggregate`` takes a level's node
-    windows (``Window``) and returns each one's (column sums, row sums)
-    of the cell counts inside it. Identical tiles to
-    ``SplittableDensityArea`` over the same dense grid, in reference
-    traversal order, with sequential map ids (Main.java:177-195).
+    windows (``Window``) and returns each one's ``Stats`` of the cell
+    counts inside it. Identical tiles to ``SplittableDensityArea`` over
+    the same dense grid, in reference traversal order, with sequential
+    map ids (Main.java:177-195).
 
-    ``stats``, if given, gets {"levels": n}: the number of ``aggregate``
-    calls made."""
+    ``stats``, if given, gets {"levels": n, "refetched": m}: the number of
+    ``aggregate`` calls made, and of nodes whose final bounds were read
+    again."""
     stats = {} if stats is None else stats
-    stats["levels"] = 0
+    stats["levels"] = stats["refetched"] = 0
     areas = _split_tree(aggregate, origin,
                         rounded_split_bounds(exact_area, resolution),
                         resolution, max_nodes, stats)
@@ -525,53 +522,48 @@ def split_levels(aggregate: Callable[[Sequence[Window]], List[AxisSums]],
                  map_id=first_map_id + i) for i, a in enumerate(areas)]
 
 
-class CellIndex:
+class KeyIndex:
     """Driver aggregator of ``split_levels`` over an occupied-cell table.
 
-    The cells are sorted x-major (key x·height + y) and y-major (key
-    y·width + x), each with int64 running counts. The cells of column x
-    with y0 ≤ y < y1 are one contiguous key range, so that column's sum is
-    the difference of the running counts at two ``searchsorted``
-    positions: a window's column and row sums cost O((w + h)·log n)."""
+    The cells sorted by their x-major key x·height + y, with int64 running
+    counts and running y·counts. The cells of column x with y0 ≤ y < y1 are
+    one contiguous key range, found by two ``searchsorted`` calls, and its
+    first and last keys give that column's occupied y-extent: a window's
+    stats cost O(w·log n)."""
 
-    def __init__(self, xs: np.ndarray, ys: np.ndarray, counts: np.ndarray,
+    def __init__(self, keys: np.ndarray, counts: np.ndarray,
                  width: int, height: int):
         self.width = width
         self.height = height
-        self._xkeys, self._xrun = _sorted_running(xs * height + ys, counts)
-        self._ykeys, self._yrun = _sorted_running(ys * width + xs, counts)
+        self._keys = keys
+        self._run = np.zeros(len(keys) + 1, dtype=np.int64)
+        np.cumsum(counts, out=self._run[1:])
+        self._yrun = np.zeros(len(keys) + 1, dtype=np.int64)
+        np.cumsum(keys % height * counts, out=self._yrun[1:])
 
-    def window_sums(self, windows: Sequence[Window]) -> List[AxisSums]:
-        return [self._sums(*w) for w in windows]
+    def window_stats(self, windows: Sequence[Window]) -> List[Stats]:
+        return [self._stats(*w) for w in windows]
 
-    def _sums(self, x0: int, x1: int, y0: int, y1: int) -> AxisSums:
-        colsum = np.zeros(x1 - x0, dtype=np.int64)
-        rowsum = np.zeros(y1 - y0, dtype=np.int64)
+    def _stats(self, x0: int, x1: int, y0: int, y1: int) -> Stats:
         # a window may overhang the grid (root-window parity push); the
-        # keys alias across columns/rows there, so clip first
+        # keys alias across columns there, so clip first
         a, b = max(x0, 0), min(x1, self.width)
         c, d = max(y0, 0), min(y1, self.height)
-        if a < b and c < d:
-            colsum[a - x0:b - x0] = _range_sums(
-                self._xkeys, self._xrun, np.arange(a, b) * self.height, c, d)
-            rowsum[c - y0:d - y0] = _range_sums(
-                self._ykeys, self._yrun, np.arange(c, d) * self.width, a, b)
-        return colsum, rowsum
-
-
-def _sorted_running(keys: np.ndarray, counts: np.ndarray
-                    ) -> Tuple[np.ndarray, np.ndarray]:
-    order = np.argsort(keys)
-    running = np.zeros(len(keys) + 1, dtype=np.int64)
-    np.cumsum(counts[order], out=running[1:])
-    return keys[order], running
-
-
-def _range_sums(keys: np.ndarray, running: np.ndarray, base: np.ndarray,
-                lo: int, hi: int) -> np.ndarray:
-    """Sum of the counts with base + lo ≤ key < base + hi, per base."""
-    return (running[np.searchsorted(keys, base + hi)]
-            - running[np.searchsorted(keys, base + lo)])
+        if a >= b or c >= d:
+            return None
+        base = np.arange(a, b, dtype=np.int64) * self.height
+        lo = np.searchsorted(self._keys, base + c)
+        hi = np.searchsorted(self._keys, base + d)
+        occ = np.flatnonzero(hi > lo)
+        if len(occ) == 0:
+            return None
+        lo, hi = lo[occ], hi[occ]
+        col = self._run[hi] - self._run[lo]
+        return (int(col.sum()), int(col @ (occ + a)),
+                int((self._yrun[hi] - self._yrun[lo]).sum()),
+                a + int(occ[0]), a + int(occ[-1]),
+                int((self._keys[lo] % self.height).min()),
+                int((self._keys[hi - 1] % self.height).max()))
 
 
 def split_area(grid: DensityGrid, exact_area: Area, resolution: int,
@@ -582,6 +574,6 @@ def split_area(grid: DensityGrid, exact_area: Area, resolution: int,
     map_id set in reference traversal order."""
     if grid.node_count() == 0:
         return []
-    index = CellIndex(*grid.cells(), grid.width, grid.height)
-    return split_levels(index.window_sums, grid.bounds, exact_area,
+    index = KeyIndex(*grid.packed(), grid.width, grid.height)
+    return split_levels(index.window_stats, grid.bounds, exact_area,
                         resolution, max_nodes, first_map_id)

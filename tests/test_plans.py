@@ -79,33 +79,19 @@ def test_scan_pushes_filters(spark):
 def test_distributed_split_level_join_is_hash_not_nlj(spark):
     """The level aggregation's cells→windows association must plan as a
     BroadcastHashJoin on the block prefix (round 1 planned a
-    BroadcastNestedLoopJoin: O(cells × nodes) per level)."""
-    import pandas as pd
+    BroadcastNestedLoopJoin: O(cells × nodes) per level), feeding the
+    one per-node stats groupBy."""
     from osm2garmin_spark.split.density import density_cells
-    from osm2garmin_spark.split.distributed import _block_shift
+    from osm2garmin_spark.split.distributed import _level_stats
 
     pts = spark.range(0, 2000).select(
         F.col("id").alias("event_id"),
         derived_lat(F.col("id")).alias("lat"),
         derived_lon(F.col("id")).alias("lon"))
-    cells = density_cells(pts)
-    k = _block_shift([(4096, 2048)])
-    win = spark.createDataFrame(pd.DataFrame(
-        [(0, bx, by, 0, 4096, 0, 2048)
-         for bx in range(0, (4095 >> k) + 1)
-         for by in range(0, (2047 >> k) + 1)],
-        columns=["node_id", "_bx", "_by", "wx0", "wx1", "wy0", "wy1"]))
-    j = (cells.withColumn("_bx", F.shiftright("cell_x", k))
-         .withColumn("_by", F.shiftright("cell_y", k))
-         .join(F.broadcast(win), ["_bx", "_by"])
-         .filter((F.col("cell_x") >= F.col("wx0"))
-                 & (F.col("cell_x") < F.col("wx1"))
-                 & (F.col("cell_y") >= F.col("wy0"))
-                 & (F.col("cell_y") < F.col("wy1")))
-         .groupBy("node_id", "cell_x").agg(F.sum("cnt")))
-    plan = _plan(j)
+    plan = _plan(_level_stats(density_cells(pts), [(0, 4096, 0, 2048)]))
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "Keys [1]: [node_id" in plan
 
 
 def test_ann_autosizing_runs_no_count_scan(spark):
@@ -321,9 +307,8 @@ def test_dedup_clusters_final_plan_is_truncated(spark):
 
 
 def test_distributed_split_jobs_per_level_bounded(spark):
-    """Round 5 fused the per-level colsum/rowsum actions into one
-    explode+groupBy: each level runs ONE toPandas action (<= 3 Spark
-    jobs under AQE: shuffle map + final + window-table broadcast).
+    """Each level runs ONE collect of the per-node stats groupBy (<= 3
+    Spark jobs under AQE: shuffle map + final + window-table broadcast).
     Guard the job budget so a regression back to per-axis actions
     (2x scans, 6 jobs/level measured at 20M rows) cannot slip in."""
     from osm2garmin_spark.expressions import derived_lat, derived_lon

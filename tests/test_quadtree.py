@@ -8,6 +8,7 @@ non-overlapping in interiors; union covers all counted nodes).
 """
 
 import numpy as np
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from osm2garmin_spark.geo.area import Area, PLANET, round_area
 from osm2garmin_spark.geo.units import to_map_unit
@@ -208,3 +209,90 @@ def test_level_loop_matches_direct_recursion():
                for t in split_area(g, exact, res, max_nodes)]
         assert len(got) > 10
         assert got == _direct_split(g, exact, res, max_nodes)
+
+
+def _tiles(tiles):
+    return [(t.map_id, t.min_lat, t.min_long, t.max_lat, t.max_long)
+            for t in tiles]
+
+
+@st.composite
+def _split_cases(draw):
+    """A dense grid at resolution 5-14 with its exact data bbox and a
+    max_nodes: a sub-area of the planet grid up to 96 cells a side, or at
+    resolution ≤ 8 the whole planet grid (its cell rows at the ±85° clamp
+    included). Cells are uniform, clustered, on the first/last row or
+    column, on one row or column, or at most 5 points."""
+    res = draw(st.integers(5, 14))
+    full = DensityGrid(PLANET, trim=True, resolution=res)
+    if res <= 8 and draw(st.booleans()):
+        bounds = PLANET
+    else:
+        w = draw(st.integers(2, min(96, full.width)))
+        h = draw(st.integers(2, min(96, full.height)))
+        x0 = draw(st.integers(0, full.width - w))
+        y0 = draw(st.integers(0, full.height - h))
+        bounds = Area(full.y_to_lat(y0), full.x_to_lon(x0),
+                      full.y_to_lat(y0 + h), full.x_to_lon(x0 + w))
+    g = DensityGrid(bounds, trim=True, resolution=res)
+    kind = draw(st.sampled_from(["uniform", "clustered", "edge_rows",
+                                 "edge_cols", "one_row", "one_col", "few"]))
+    n = draw(st.integers(1, 5) if kind == "few" else st.integers(20, 3000))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    xs = rng.integers(0, g.width, n)
+    ys = rng.integers(0, g.height, n)
+    if kind == "clustered":
+        cx, cy = rng.integers(0, g.width), rng.integers(0, g.height)
+        m = n * 3 // 4
+        xs[:m] = np.clip(cx + rng.normal(0, g.width / 16 + 1, m), 0, g.width - 1)
+        ys[:m] = np.clip(cy + rng.normal(0, g.height / 16 + 1, m), 0, g.height - 1)
+    elif kind == "edge_rows":
+        ys = rng.choice([0, g.height - 1], n)
+    elif kind == "edge_cols":
+        xs = rng.choice([0, g.width - 1], n)
+    elif kind == "one_row":
+        ys[:] = rng.integers(0, g.height)
+    elif kind == "one_col":
+        xs[:] = rng.integers(0, g.width)
+    np.add.at(g.grid, (xs, ys), 1)
+    g.total = int(g.grid.sum())
+    # the extreme points lie somewhere inside their cells
+    off = rng.integers(0, 1 << (24 - res), 4)
+    exact = Area(g.y_to_lat(int(ys.min())) + int(off[0]),
+                 g.x_to_lon(int(xs.min())) + int(off[1]),
+                 g.y_to_lat(int(ys.max())) + int(off[2]),
+                 g.x_to_lon(int(xs.max())) + int(off[3]))
+    max_nodes = draw(st.integers(1, max(1, g.total // 2)))
+    return g, exact, res, max_nodes
+
+
+@settings(max_examples=200, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_split_cases())
+def test_split_area_matches_direct_recursion_property(case):
+    g, exact, res, max_nodes = case
+    assert _tiles(split_area(g, exact, res, max_nodes)) \
+        == _direct_split(g, exact, res, max_nodes)
+
+
+def test_refetch_path_matches_direct_recursion():
+    """Nodes whose rounded bounds leave their window (the root's parity
+    push past the planet grid's clamped edge row) are read again over
+    their bounds; the tiles still equal the direct recursion's."""
+    from osm2garmin_spark.split.quadtree import KeyIndex, split_levels
+
+    rng = np.random.default_rng(7)
+    g = DensityGrid(PLANET, trim=True, resolution=9)
+    xs = rng.integers(0, g.width, 4000)
+    ys = rng.integers(0, g.height, 4000)
+    xs[:2000] %= g.width // 7
+    np.add.at(g.grid, (xs, ys), 1)
+    g.total = int(g.grid.sum())
+    exact = Area(g.y_to_lat(int(ys.min())), g.x_to_lon(int(xs.min())),
+                 g.y_to_lat(int(ys.max()) + 1), g.x_to_lon(int(xs.max()) + 1))
+    stats = {}
+    index = KeyIndex(*g.packed(), g.width, g.height)
+    got = split_levels(index.window_stats, g.bounds, exact, 9, 50,
+                       stats=stats)
+    assert stats["refetched"] > 0
+    assert _tiles(got) == _direct_split(g, exact, 9, 50)

@@ -214,3 +214,51 @@ def test_density_observed_bounds_equal_exact_bounds(spark, case):
     res = run_tiling_pipeline(df, max_nodes=max(n // 10, 1), overlap=0)
     assert res is not None
     assert res.assigned.select("event_id").distinct().count() == n
+
+
+@pytest.mark.parametrize("strategy", ["driver", "distributed"])
+def test_nan_coordinate_is_dropped_like_null(spark, strategy):
+    """A NaN coordinate used to map to 0: the row was counted in the
+    histogram, stretched the exact bbox to (0, 0) and was assigned a
+    tile. NaN now behaves like NULL on both split strategies and in the
+    assignment."""
+    from osm2garmin_spark.split.density import exact_bounds
+
+    nan = float("nan")
+    df = _rows(spark, [(1, 10.0, 20.0), (2, nan, 5.0), (3, 11.0, nan),
+                       (4, None, 3.0), (5, 12.0, 21.0)], partitions=2)
+    want = Area(int(to_map_unit(10.0)), int(to_map_unit(20.0)),
+                int(to_map_unit(12.0)), int(to_map_unit(21.0)))
+    grid, exact = collect_density(df, "lat", "lon", 13, PLANET)
+    assert exact == want and grid.node_count() == 2
+    assert exact_bounds(df, "lat", "lon") == want
+    res = run_tiling_pipeline(df, max_nodes=1, overlap=0,
+                              split_strategy=strategy)
+    assert sorted(r[0] for r in res.assigned.select("event_id").collect()) \
+        == [1, 5]
+
+
+def _assert_packed_cells_match(df, res):
+    from osm2garmin_spark.split.density import density_cells
+
+    grid, _ = collect_density(df, "lat", "lon", res, PLANET)
+    keys, _ = grid.packed()
+    assert (np.diff(keys) > 0).all()
+    want = sorted(tuple(r) for r in density_cells(df, "lat", "lon", res, PLANET)
+                  .select("cell_x", "cell_y", "cnt").collect())
+    got = sorted(zip(*(a.tolist() for a in grid.cells())))
+    assert got == want
+
+
+@pytest.mark.parametrize("res", [9, 13, 24])
+def test_packed_cell_keys_equal_density_cells(spark, corpus, res):
+    """collect_density's packed x·height + y keys, unpacked, are
+    density_cells' (cell_x, cell_y, cnt) triples, up to resolution 24."""
+    _assert_packed_cells_match(corpus, res)
+
+
+@pytest.mark.parametrize("rows", [[], [(7, 48.85, 2.35)]],
+                         ids=["empty", "one-row"])
+def test_packed_cell_keys_empty_and_one_row(spark, rows):
+    for res in (9, 13, 24):
+        _assert_packed_cells_match(_rows(spark, rows), res)
